@@ -23,10 +23,12 @@ from __future__ import annotations
 
 from collections.abc import Callable
 from dataclasses import dataclass, field
+from typing import TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
+R = TypeVar("R")
 
 
 @dataclass
@@ -69,6 +71,39 @@ def queries() -> dict[str, QueryFn]:
 
 def oracle_sql() -> dict[str, str]:
     return {name: e.oracle for name, e in catalog().items() if e.oracle is not None}
+
+
+def run_query(
+    spark: SparkSession,
+    build: Callable[[], DataFrame],
+    action: Callable[[DataFrame], R],
+) -> R:
+    """Build a query, run ``action`` on it, then release every persist
+    the query made; returns the action's result.
+
+    The query is the one lifetime for cached state. Operators that feed
+    one intermediate to several consumers persist it MEMORY_AND_DISK
+    and return a lazy plan that still reads the cache, so they cannot
+    unpersist it themselves; run_query calls
+    ``spark.catalog.clearCache()`` in a ``finally`` instead, whether the
+    action succeeded or raised. Nothing a query persists outlives it,
+    so the next query recomputes from the source, also when the data
+    at a path was rewritten in between.
+
+    Driver-side values a build collects (bm25 corpus stats, query
+    vectors, trained PQ books) are recomputed by every build, never
+    memoized. The one memo left is model.load_table's plan memo: it
+    holds no data and lives on the session object.
+
+    clearCache drops EVERY cache entry of the session, including ones
+    the caller persisted before the call, and an already-built plan
+    whose entry was dropped recomputes its upstream per consumer — so
+    build a fresh DataFrame inside ``build`` for every run.
+    """
+    try:
+        return action(build())
+    finally:
+        spark.catalog.clearCache()
 
 
 _LOADED = False

@@ -108,9 +108,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # ``spark.read.parquet`` costs ~50-100 ms of driver-side work
     # (py4j + JVM file listing + footer schema inference) PER CALL,
     # and multi-table queries pay it up to 5x per plan build.
-    # Staleness contract mirrors bm25._STATS_MEMO: the memo dict lives
-    # ON the session object (dies with it) and keys include the file's
-    # (mtime_ns, size), so a rewritten testdata file misses.
+    # It holds no data, so it is the one memo fegis_spark keeps: the
+    # dict lives ON the session object (dies with it) and keys include
+    # the file's (mtime_ns, size), so a rewritten testdata file misses.
     path = table_path(sf_dir, name)
     memo = spark.__dict__.setdefault("_fegis_load_memo", {})
     abspath = os.path.abspath(path)
@@ -135,16 +135,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = spark.read.parquet(path)
     memo[key] = df
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view for spark.sql paths."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
 #: Size gate for explicit broadcast-join hints, in SOURCE PARQUET bytes.

@@ -15,16 +15,14 @@ uses the same Unicode analyzer as the dedup family
 Scale shape: ONE narrow projection per document — (id, dl, tf_1..tf_k)
 for the k query terms, k small — persisted because it feeds both the
 corpus-stats aggregate and the scoring pass. Stats collapse to a single
-broadcast row (map-side combined), scoring is a per-row expression, and
+row (map-side combined) collected to the driver, scoring is a per-row
+expression, and
 the top-k is a TakeOrderedAndProject (per-partition heaps, no global
 sort, no window). The corpus is scanned once and never shuffled.
 
 Caching: the (id, dl, tf_*) projection persists MEMORY_AND_DISK
-because it feeds both the stats aggregate and the scoring pass, and the
-operator returns a LAZY plan that still references it — so it cannot
-unpersist here. The entry stays until LRU eviction or
-spark.catalog.clearCache() (the repo-wide cache-ownership policy; the
-same note sits on every persisting operator).
+because it feeds both the stats aggregate and the scoring pass; the
+returned plan still references it, so catalog.run_query releases it.
 
 Determinism: all per-row math IEEE double; avgdl goes through
 DECIMAL(38,6) (partition-order-proof mean); idf goes through
@@ -44,37 +42,11 @@ from pyspark.sql import functions as F
 K1 = 1.2
 B = 0.75
 
-#: session-lifetime memo of the hoisted 1-row stats, keyed on the
-#: SEMANTIC HASH of the analyzed tfs plan + the analyzer terms. The
-#: tfs projection is already persisted through Spark's cache manager,
-#: which keys on the same canonical plan and carries the same
-#: staleness contract (data changing under an already-listed path is
-#: out of scope within a session) — so memoizing the 1-row aggregate
-#: derived from that cached plan adds no new staleness class, and it
-#: removes the per-builder-call stats job that repeated invocations
-#: (bench runs, RRF fusions re-using one corpus) would otherwise pay.
-_STATS_MEMO: dict[tuple, tuple[float, tuple[float, ...]]] = {}
-_STATS_MEMO_MAX = 64
-
 
 def clear_memos() -> None:
-    """Drop every session-lifetime driver memo (this module's stats
-    memo and vector_q's query-vector memo). The memos share Spark's
-    cache-manager staleness contract — data rewritten at an
-    already-read path within a session is assumed not to happen — so
-    code that breaks that assumption (tests rewriting fixtures, a
-    clearCache/refreshByPath call after a data reload) should call
-    this alongside (advisor r9: the memos otherwise expose no public
-    invalidation hook and would serve stale avgdl/idf stats)."""
-    _STATS_MEMO.clear()
-    from fegis_spark.queries import vector_q
-
-    vector_q._QUERY_VEC_MEMO.clear()
-
-
-def _term_tf(tok: Column, term: str) -> Column:
-    """Token frequency of an analyzer token in the token array."""
-    return F.size(F.filter(tok, lambda t: t == F.lit(term)))
+    """No-op kept for callers that still import it: fegis_spark holds
+    no driver-side memos, and catalog.run_query releases every persist
+    a query makes."""
 
 
 def bm25_scores(
@@ -84,26 +56,24 @@ def bm25_scores(
     terms: Sequence[str],
     k1: float = K1,
     b: float = B,
-    hoist_stats: bool = True,
 ) -> DataFrame:
     """(id, score) for every document with score > 0 — feed into a
     TakeOrdered for top-k (bm25_topk) or into an RRF fusion.
-    The lambda-t token-equality filters keep _term_tf's exact
-    semantics (tests/test_search.py pins the reference formula).
+    tf is the analyzer-token count per term (tests/test_search.py pins
+    the reference formula).
 
-    hoist_stats=True (default, r9): the 1-row corpus stats
-    (avgdl + portable_ln idfs) are collected in a bounded driver
-    round-trip and re-entered as double literals — the classifier/BPE
-    precedent. The r8 plan evaluated the idfs on the broadcast side of
-    a BroadcastNestedLoopJoin; the HOF-bearing portable_ln expression
-    disabled whole-stage codegen for the scoring stage and cost the
-    rrf_hybrid_bm25 headline a consistent 1.7x (r8 verdict item 1;
-    A/B in evidence/bm25_ab_r9.json). The literal values are
-    BIT-IDENTICAL to the in-plan form (same portable_ln expression,
-    evaluated by the same engine; py4j re-enters doubles via
-    shortest-repr + correctly-rounded parseDouble), so the DuckDB
-    oracle is unaffected. hoist_stats=False keeps the fully-lazy
-    crossJoin plan (used by the A/B probe)."""
+    The 1-row corpus stats (avgdl + portable_ln idfs) are collected
+    in a bounded driver round-trip and re-entered as double literals —
+    the classifier/BPE precedent. Evaluating the idfs in-plan (on the
+    broadcast side of a nested-loop join) put the HOF-bearing
+    portable_ln expression in the scoring stage, disabled whole-stage
+    codegen there and cost the rrf_hybrid_bm25 headline 1.7x
+    (evidence/bm25_ab_r9.json). The literal values are BIT-IDENTICAL
+    to the in-plan form (same portable_ln expression, evaluated by the
+    same engine; py4j re-enters doubles via shortest-repr +
+    correctly-rounded parseDouble), so the DuckDB oracle is
+    unaffected. The stats job runs once per build: nothing is memoized
+    across builds, so a rewritten corpus is always re-read."""
     from fegis_spark.plans.filters import analyzer_tokens
 
     qterms: list[str] = []
@@ -135,26 +105,25 @@ def bm25_scores(
 
     n = len(qterms)
 
-    def build_stats_plan() -> DataFrame:
-        # idf is a function of the 1-row stats alone, so it is computed
-        # ONCE there (not per corpus row) via portable_ln (sqlfrag.py),
-        # which is bit-identical across engines — native ln is 1 ulp
-        # off glibc on ~2.5% of inputs (the midpoint flake class); with
-        # every operand identical cross-engine the score ships UNROUNDED
-        from fegis_spark.queries.sqlfrag import portable_ln
+    # idf is a function of the 1-row stats alone, so it is computed
+    # ONCE there (not per corpus row) via portable_ln (sqlfrag.py),
+    # which is bit-identical across engines — native ln is 1 ulp off
+    # glibc on ~2.5% of inputs (the midpoint flake class); with every
+    # operand identical cross-engine the score ships UNROUNDED.
+    from fegis_spark.queries.sqlfrag import portable_ln
 
-        base_stats = tfs.agg(
-            F.count("*").cast("double").alias("n_docs"),
-            (
-                F.sum(F.col("dl").cast("decimal(38,6)")).cast("double")
-                / F.count("*")
-            ).alias("avgdl"),
-            *[
-                F.sum((F.col(f"tf{i}") > 0).cast("double")).alias(f"df{i}")
-                for i in range(n)
-            ],
-        )
-        return base_stats.select(
+    base_stats = tfs.agg(
+        F.count("*").cast("double").alias("n_docs"),
+        (
+            F.sum(F.col("dl").cast("decimal(38,6)")).cast("double") / F.count("*")
+        ).alias("avgdl"),
+        *[
+            F.sum((F.col(f"tf{i}") > 0).cast("double")).alias(f"df{i}")
+            for i in range(n)
+        ],
+    )
+    srow = (
+        base_stats.select(
             "avgdl",
             *[
                 (
@@ -164,79 +133,37 @@ def bm25_scores(
                 ).alias(f"arg{i}")
                 for i in range(n)
             ],
-        ).select(
+        )
+        .select(
             "avgdl",
             *[
                 F.expr(portable_ln(f"arg{i}", spark=True)).alias(f"idf{i}")
                 for i in range(n)
             ],
         )
+        .collect()[0]
+    )
+    # Empty corpus: the aggregates are NULL; placeholders keep the
+    # projection well-typed (tfs is empty, so the output is empty
+    # either way — tests/test_empty_inputs.py).
+    avgdl_v = F.lit(float(srow["avgdl"]) if srow["avgdl"] is not None else 1.0)
+    idf_v = [
+        F.lit(float(srow[f"idf{i}"]) if srow[f"idf{i}"] is not None else 0.0)
+        for i in range(n)
+    ]
 
-    if hoist_stats:
-        # Bounded driver round-trip: ONE row (avgdl + k idfs), the
-        # portable_ln evaluation happens in this tiny Spark job, and
-        # the scoring pass below is a pure codegen projection over the
-        # persisted tfs — no join, no HOF, no codegen fallback.
-        # Memoized per (semantic hash + CANONICALIZED plan text, terms)
-        # — see _STATS_MEMO. semanticHash alone is 32-bit (advisor r9:
-        # a collision between two corpora queried with the same terms
-        # would silently reuse the wrong stats); the canonicalized
-        # plan's string carries the scan paths and full projection
-        # with expression IDs normalized (the raw analyzed toString
-        # embeds fresh per-analysis IDs and would never repeat), so
-        # the key is collision-proof for one extra py4j string fetch.
-        analyzed = tfs._jdf.queryExecution().analyzed()
-        key = (
-            analyzed.semanticHash(),
-            analyzed.canonicalized().toString(),
-            tuple(qterms),
-        )
-        memo = _STATS_MEMO.get(key)
-        if memo is None:
-            srow = build_stats_plan().collect()[0]
-            # Empty corpus: the aggregates are NULL; placeholders keep
-            # the projection well-typed (tfs is empty, so the output is
-            # empty either way — tests/test_empty_inputs.py).
-            memo = (
-                float(srow["avgdl"]) if srow["avgdl"] is not None else 1.0,
-                tuple(
-                    float(srow[f"idf{i}"]) if srow[f"idf{i}"] is not None else 0.0
-                    for i in range(n)
-                ),
-            )
-            if len(_STATS_MEMO) >= _STATS_MEMO_MAX:
-                _STATS_MEMO.pop(next(iter(_STATS_MEMO)))
-            _STATS_MEMO[key] = memo
-        avgdl_v = F.lit(memo[0])
-        idf_v = [F.lit(v) for v in memo[1]]
-
-        def term_score_lit(i: int) -> Column:
-            tf = F.col(f"tf{i}")
-            norm = tf + k1 * (1.0 - b + b * F.col("dl") / avgdl_v)
-            return idf_v[i] * tf * (k1 + 1.0) / norm
-
-        score = None
-        for i in range(n):
-            s = term_score_lit(i)
-            score = s if score is None else score + s
-        return tfs.select("id", score.alias("score")).filter(F.col("score") > 0)
-
-    stats = F.broadcast(build_stats_plan())  # bcast-ok: 1-row corpus stats
-
+    # The scoring pass is a pure codegen projection over the persisted
+    # tfs — no join, no HOF, no codegen fallback.
     def term_score(i: int) -> Column:
         tf = F.col(f"tf{i}")
-        norm = tf + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl"))
-        return F.col(f"idf{i}") * tf * (k1 + 1.0) / norm
+        norm = tf + k1 * (1.0 - b + b * F.col("dl") / avgdl_v)
+        return idf_v[i] * tf * (k1 + 1.0) / norm
 
     score = None
     for i in range(n):
         s = term_score(i)
         score = s if score is None else score + s
-    return (
-        tfs.crossJoin(stats)  # bcast-ok: 1-row corpus-stats agg
-        .select("id", score.alias("score"))
-        .filter(F.col("score") > 0)
-    )
+    return tfs.select("id", score.alias("score")).filter(F.col("score") > 0)
 
 
 def bm25_topk(

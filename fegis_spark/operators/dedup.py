@@ -271,22 +271,6 @@ def keep_best_dedup(
     )
 
 
-def minhash_signature(shingles: Column, num_hashes: int = 16) -> Column:
-    """k seeded xxhash64 minima over the shingle set → array<long>.
-
-    Same hash family as minhash_lsh_pairs: one string hash per
-    shingle, then fixed-width (long, seed) re-hashes per family
-    member. Column form for composability; the data path uses the
-    explode/agg form (codegen'd, this HOF form is interpreted)."""
-    hashed = F.transform(shingles, lambda s: F.xxhash64(s))
-    return F.array(
-        *[
-            F.array_min(F.transform(hashed, lambda h, i=i: F.xxhash64(h, F.lit(i))))
-            for i in range(num_hashes)
-        ]
-    )
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str,
@@ -295,7 +279,6 @@ def minhash_lsh_pairs(
     bands: int = 4,
     ngram: int = 3,
     jaccard_threshold: float = 0.5,
-    cache_intermediate: bool = True,
     max_bucket_size: int | None = 512,
     sh_bcast_bound: int | None = None,
 ) -> DataFrame:
@@ -313,20 +296,17 @@ def minhash_lsh_pairs(
     surface. None disables the cap (the oracle-checked portable twin's
     default).
 
-    cache_intermediate persists the shingle table, which the plan uses
-    three times (signature + both sides of candidate verification) —
-    at warehouse scale you would materialize signatures to a table
-    instead; MEMORY_AND_DISK is the single-job analog, and the entry
-    outlives the call (the returned plan references it) until LRU
-    eviction or spark.catalog.clearCache() — the repo-wide
-    cache-ownership policy.
+    The shingle table persists, because the plan uses it three times
+    (signature + both sides of candidate verification) — at warehouse
+    scale you would materialize signatures to a table instead;
+    MEMORY_AND_DISK is the single-job analog.
     """
-    rows_per_band = num_hashes // bands
-    base = with_shingles(df, text_col, id_col, ngram)
-    if cache_intermediate:
-        from pyspark import StorageLevel
+    from pyspark import StorageLevel
 
-        base = base.persist(StorageLevel.MEMORY_AND_DISK)
+    rows_per_band = num_hashes // bands
+    base = with_shingles(df, text_col, id_col, ngram).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
     # signature via explode + codegen'd hashes + min-agg: the gram
     # string is hashed ONCE (xxhash64 over ~20 variable bytes), then
     # the k family members re-hash that 8-byte base with the seed
@@ -988,9 +968,10 @@ def connected_components(
 
     The FINAL round's checkpoint blocks stay pinned: the returned
     DataFrame reads them, so the operator cannot free them (intermediate
-    rounds ARE freed eagerly). LRU eviction or
-    spark.catalog.clearCache() reclaims — repo-wide cache-ownership
-    policy; same applies to connected_components_star.
+    rounds ARE freed eagerly). They are RDD blocks, not CacheManager
+    entries, so clearCache does not reach them: LRU eviction or the
+    context cleaner (once the DataFrame is garbage) reclaims them. Same
+    for connected_components_star.
     """
     import warnings
 
@@ -1137,11 +1118,10 @@ def _portable_sig_bands(
     num_hashes: int,
     bands: int,
     ngram: int,
-    cache_intermediate: bool,
     seed_bcast_bound: int | None = None,
 ):
     """Shared md5-60bit MinHash pipeline: shingle table (`base`: doc,
-    sh — persisted when cache_intermediate, it feeds the signature
+    sh — persisted, it feeds the signature
     build AND the verify joins), the wide signature table (`sig`: doc,
     mh0..mh{k-1} — the estimator-audit query consumes it as an array)
     and the banded signature table (`banded`: doc, band, bh). The hash
@@ -1158,12 +1138,12 @@ def _portable_sig_bands(
     so 32x source bytes upper-bounds it even at dedup ratio 1.
     None -> no hint; AQE picks the strategy from runtime sizes.
     """
-    rows_per_band = num_hashes // bands
-    base = with_shingles(df, text_col, id_col, ngram)
-    if cache_intermediate:
-        from pyspark import StorageLevel
+    from pyspark import StorageLevel
 
-        base = base.persist(StorageLevel.MEMORY_AND_DISK)
+    rows_per_band = num_hashes // bands
+    base = with_shingles(df, text_col, id_col, ngram).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
 
     # Spark-SQL string spelling of the portable 60-bit hash (first 15
     # md5 hex chars → bigint) — single parsed expressions instead of a
@@ -1241,7 +1221,6 @@ def minhash_lsh_pairs_portable(
     bands: int = 4,
     ngram: int = 3,
     jaccard_threshold: float = 0.5,
-    cache_intermediate: bool = True,
     max_bucket_size: int | None = None,
     seed_bcast_bound: int | None = None,
     sh_bcast_bound: int | None = None,
@@ -1258,10 +1237,8 @@ def minhash_lsh_pairs_portable(
     — keep the xxhash64 form on the 100 TB data path and this one as
     the cross-engine verification surface.
 
-    cache_intermediate persists the shingle table (used by the
-    signature build and both verify sides); the returned plan
-    references the cache, so it stays until LRU eviction or
-    spark.catalog.clearCache() (the repo-wide cache-ownership policy).
+    The shingle table persists (used by the signature build and both
+    verify sides).
 
     max_bucket_size defaults to None (uncapped) so the DuckDB oracle
     replays the candidate set exactly; pass a cap to get the same
@@ -1273,7 +1250,7 @@ def minhash_lsh_pairs_portable(
     pass the same 32x documents bound as seed_bcast_bound.
     """
     base, _sig, banded = _portable_sig_bands(
-        df, text_col, id_col, num_hashes, bands, ngram, cache_intermediate,
+        df, text_col, id_col, num_hashes, bands, ngram,
         seed_bcast_bound=seed_bcast_bound,
     )
     cand = banded_candidate_pairs(banded, max_bucket_size=max_bucket_size)
@@ -1476,7 +1453,6 @@ def minhash_incremental_pairs_portable(
     bands: int = 4,
     ngram: int = 3,
     jaccard_threshold: float = 0.5,
-    cache_intermediate: bool = True,
     max_bucket_size: int | None = None,
     seed_bcast_bound: int | None = None,
 ) -> DataFrame:
@@ -1498,11 +1474,11 @@ def minhash_incremental_pairs_portable(
     # seed-dedup only on the corpus side (scale-proportional grams);
     # the batch side keeps the inline form — see _portable_sig_bands
     base_c, _sig_c, banded_c = _portable_sig_bands(
-        corpus, text_col, id_col, num_hashes, bands, ngram, cache_intermediate,
+        corpus, text_col, id_col, num_hashes, bands, ngram,
         seed_bcast_bound=seed_bcast_bound,
     )
     base_b, _sig_b, banded_b = _portable_sig_bands(
-        batch, text_col, id_col, num_hashes, bands, ngram, cache_intermediate
+        batch, text_col, id_col, num_hashes, bands, ngram
     )
     return minhash_incremental_pairs_precomputed(
         banded_c.select("doc", "band", "bh"),

@@ -888,7 +888,7 @@ def build_ivfpq_index(
     float embeddings (measured: evidence/pq_adc_ab_r11.json).
     Routing centroids and codebooks are the md5-derived portable
     literals; a trained deployment swaps them into the same
-    expressions (the literal-hoist pattern, bm25._STATS_MEMO)."""
+    expressions (the literal-hoist pattern of bm25_scores' stats)."""
     dots = ivfp_dots_expr(vec_col, 64)
     assigned = corpus_df.select(
         F.col(corpus_id).alias("corpus_id"),

@@ -64,24 +64,6 @@ def latest_per_key_window(
     )
 
 
-def assign_sequence(df: DataFrame, key: str, order: str, out: str = "sequence_order") -> DataFrame:
-    """A2: contiguous 1-based arrival rank per session.
-
-    The reference does a read-modify-write round trip per invocation
-    (fegis/storage.py:132-139); batch form is one window pass.
-    """
-    # grpwin-ok: caller key (user/session id) — cardinality scales with input
-    w = Window.partitionBy(key).orderBy(order)
-    return df.withColumn(out, F.row_number().over(w))
-
-
-def with_preceding(df: DataFrame, key: str, order: str, id_col: str, out: str = "preceding_id") -> DataFrame:
-    """W2: reproduce the reference's ``preceding_memory_id`` via lag."""
-    # grpwin-ok: caller key (user/session id) — cardinality scales with input
-    w = Window.partitionBy(key).orderBy(order)
-    return df.withColumn(out, F.lag(id_col).over(w))
-
-
 def resolve_predecessors(
     df: DataFrame, id_col: str, pred_col: str, attrs: list[str], prefix: str = "pred_"
 ) -> DataFrame:

@@ -62,7 +62,6 @@ def rrf_fuse(
     k: int = 10,
     rrf_k: int = RRF_K,
     pool: int | None = None,
-    cache_intermediate: bool = True,
 ) -> DataFrame:
     """Hybrid search with corpus-wide rank semantics — r_dense/r_lex are
     each doc's rank over the FULL corpus — via a bounded-candidate plan.
@@ -82,26 +81,21 @@ def rrf_fuse(
     shuffles (the count aggregate is map-side combined down to <=2*pool
     rows).
 
-    cache_intermediate persists the scored projection (id, dense, lex —
-    ~24 bytes/row, ~1% of corpus width), which the plan otherwise
-    re-derives once per pool and once per rank join: four scans of the
-    corpus plus four cosine passes become one. At warehouse scale you
-    would materialize it to a scratch table instead. The returned plan
-    still references the cache, so the operator cannot unpersist it; it
-    stays until LRU eviction or spark.catalog.clearCache() (the
-    repo-wide cache-ownership policy).
+    The scored projection (id, dense, lex — ~24 bytes/row, ~1% of
+    corpus width) persists; the plan otherwise re-derives it once per
+    pool and once per rank join: four scans of the corpus plus four
+    cosine passes become one. At warehouse scale you would materialize
+    it to a scratch table instead.
     """
+    from pyspark import StorageLevel
+
     if pool is None:
         pool = max(100, 2 * k + rrf_k + 1)
     scored = df.selectExpr(
         f"{id_col} AS id",
         cosine_lit_sql(vec_col, query_vec) + " AS dense",
         lexical_score_sql(text_col, query_terms) + " AS lex",
-    )
-    if cache_intermediate:
-        from pyspark import StorageLevel
-
-        scored = scored.persist(StorageLevel.MEMORY_AND_DISK)
+    ).persist(StorageLevel.MEMORY_AND_DISK)
     dc = scored.orderBy(F.desc("dense"), F.col("id")).limit(pool)
     lc = scored.orderBy(F.desc("lex"), F.col("id")).limit(pool)
     # pools carry identical full rows for the same id, so distinct()
@@ -163,9 +157,7 @@ def rrf_fuse_pooled(
     all-corpus form (rrf_fuse); a doc absent from a modality's pool
     contributes 0 for that modality (the standard candidate-pool RRF
     convention). Corpus-size work is two scans + two top-k heaps, or
-    one scan of the persisted scored projection, which — as in
-    rrf_fuse — outlives the call until LRU eviction or
-    spark.catalog.clearCache()."""
+    one scan of the persisted scored projection (as in rrf_fuse)."""
     scored = df.selectExpr(
         f"{id_col} AS id",
         cosine_lit_sql(vec_col, query_vec) + " AS dense",

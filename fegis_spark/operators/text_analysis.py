@@ -267,9 +267,11 @@ def winnow_match_pairs(
     the r12 window+self-join+union shape re-executed the
     explode/exchange/sort/window once per consumer (zero ReusedExchange
     in the executed plan). With the join gone the fingerprint subtree
-    has ONE consumer, so the capped branch drops the persist too.
-    Capped hashes are observable via winnow_bucket_stats (the
-    no-silent-caps rule). None = exact (the oracle-checked default)."""
+    has ONE consumer, but `sets` still persists in both branches: the
+    interpreted fps projection must materialize exactly once (see the
+    comment at the persist). Capped hashes are observable via
+    winnow_bucket_stats (the no-silent-caps rule). None = exact (the
+    oracle-checked default)."""
     from pyspark import StorageLevel
 
     # persisted in BOTH branches: beyond the uncapped join's two
@@ -404,8 +406,7 @@ def unigram_logprob(
     broadcast join and the corpus-total aggregate, and without the
     cache each consumer would re-scan the corpus to rebuild it — at
     100 TB that third scan costs more than caching a distinct-token
-    table ever can. LRU eviction reclaims it; callers scoring many
-    corpora in one session can spark.catalog.clearCache().
+    table ever can.
     """
     from pyspark import StorageLevel
 

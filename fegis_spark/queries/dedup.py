@@ -459,10 +459,7 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     flagged feeds both the islands window and the per-doc counts —
     without the caches the corpus is scanned and re-shingled 8×
     (plan-measured), with them once. At warehouse scale you'd
-    materialize to scratch tables. The returned plan references the
-    caches, so the operator cannot unpersist them; they stay until LRU
-    eviction or spark.catalog.clearCache() (the repo-wide
-    cache-ownership policy)."""
+    materialize to scratch tables."""
     from pyspark import StorageLevel
     from pyspark.ml.feature import NGram
     from pyspark.sql import Window
@@ -1052,7 +1049,6 @@ def dedup_minhash_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     base, _sig, banded = _portable_sig_bands(
         docs, "text", "doc_id", num_hashes=16, bands=4, ngram=3,
-        cache_intermediate=True,
         seed_bcast_bound=32 * table_bytes(sf_dir, "documents"),
     )
     # band-ok: eval harness over the sf corpus — unbounded gram keyspace
@@ -1347,7 +1343,6 @@ def dedup_minhash_estimate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     base, sig, banded = _portable_sig_bands(
         docs, "text", "doc_id", num_hashes=16, bands=4, ngram=3,
-        cache_intermediate=True,
         seed_bcast_bound=32 * table_bytes(sf_dir, "documents"),
     )
     # band-ok: 2^60 md5 band keyspace + HOT_CAP routing below

@@ -954,9 +954,7 @@ def curriculum_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored projection (doc_id, q — ~16 bytes/row) is persisted
     MEMORY_AND_DISK because both the cutpoint agg and the assignment
     consume it — without the cache the quality megaexpression runs
-    twice over the full corpus. The returned plan references the cache
-    (repo-wide cache-ownership policy: stays until LRU eviction or
-    spark.catalog.clearCache())."""
+    twice over the full corpus."""
     from pyspark import StorageLevel
 
     from fegis_spark.operators.text_analysis import quality_score_expr

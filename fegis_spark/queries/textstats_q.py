@@ -344,10 +344,7 @@ def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     method limit, disabling whole-stage codegen for the hottest stage.
     Split this way each stage codegens and the expressions run once —
     measured 1.6× faster at sf0.1 (3.0s → 1.9s). At warehouse scale
-    you would materialize to a scratch table instead. The returned plan
-    still references the cache, so the operator cannot unpersist it; it
-    stays until LRU eviction or spark.catalog.clearCache() (the
-    repo-wide cache-ownership policy)."""
+    you would materialize to a scratch table instead."""
     from pyspark import StorageLevel
 
     from fegis_spark.operators.dedup import normalize_text
@@ -604,9 +601,7 @@ def quality_median_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     and DuckDB's quantile_cont share linear interpolation, so even the
     medians hash-match. The scored projection (lang, q — ~16 B/row)
     persists: it feeds the median agg AND the gate, and re-deriving it
-    would re-run the quality expression over the corpus twice. The
-    cache entry outlives the call (LRU eviction or
-    spark.catalog.clearCache() reclaims it — repo-wide policy)."""
+    would re-run the quality expression over the corpus twice."""
     from pyspark import StorageLevel
 
     docs = load_table(spark, sf_dir, "documents")

@@ -30,23 +30,11 @@ _COS = """
 """
 
 
-#: session-lifetime memo of driver-side query vectors: the lookup is a
-#: pure function of (sf_dir, vec_id) and every search-family builder
-#: pays a ~0.2 s head() job for it otherwise. Same staleness contract
-#: as Spark's own file-listing/table caches (a path's data is assumed
-#: stable within a session).
-_QUERY_VEC_MEMO: dict[tuple[str, int], list[float]] = {}
-
-
 def _query_vec(spark, sf_dir, vec_id: int = 0):
-    key = (sf_dir, vec_id)
-    v = _QUERY_VEC_MEMO.get(key)
-    if v is None:
-        emb = load_table(spark, sf_dir, "embeddings")
-        row = emb.filter(F.col("vec_id") == vec_id).select("embedding").head()
-        v = [float(x) for x in row.embedding]
-        _QUERY_VEC_MEMO[key] = v
-    return v
+    """The query vector as Python floats (one bounded head() job)."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    row = emb.filter(F.col("vec_id") == vec_id).select("embedding").head()
+    return [float(x) for x in row.embedding]
 
 
 @register(
@@ -1670,7 +1658,7 @@ def ann_pq_adc_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     (bounded panel), scoring is a pure projection, and the only
     shuffle is the per-query top-k window over candidates. Trained
     codebooks slot into the same expressions as literals (the
-    memoized driver round-trip pattern, bm25._STATS_MEMO)."""
+    driver round-trip pattern of bm25_scores' hoisted stats)."""
     from fegis_spark.operators.knn import PQ_ADC_EXPR, pq_codes_expr, pq_luts_expr
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -2073,23 +2061,6 @@ def ann_pq_rerank_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # and the oracle RETRAINS them from the same table, closing the r11
 # verdict #3 gap (trained PQ lived only in the library tier).
 
-#: per-sf memo for the driver-side book training round-trip — the gate
-#: builds each query several times (plan pins, row compare); same
-#: staleness contract as bm25._STATS_MEMO (sf_dir fully determines the
-#: sample and the trainer is deterministic)
-_PQT_MEMO: dict[str, list] = {}
-
-
-def _pqt_books(spark: SparkSession, sf_dir: str) -> list:
-    if sf_dir not in _PQT_MEMO:
-        from fegis_spark.operators.knn import train_pq_books_portable
-
-        _PQT_MEMO[sf_dir] = train_pq_books_portable(
-            load_table(spark, sf_dir, "embeddings"), "vec_id"
-        )
-    return _PQT_MEMO[sf_dir]
-
-
 def _pqt_rerank_oracle() -> str:
     """DuckDB restatement of ann_pq_rerank_trained that RETRAINS the
     codebooks (pq_trained_books_sql — bit-identical to the Python
@@ -2188,10 +2159,11 @@ def ann_pq_rerank_trained_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         PQ_ADC_EXPR,
         pq_trained_codes_expr,
         pq_trained_luts_expr,
+        train_pq_books_portable,
     )
 
-    books = _pqt_books(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
+    books = train_pq_books_portable(emb, "vec_id")
     corpus = emb.select(
         F.col("vec_id").alias("corpus_id"),
         F.expr(pq_trained_codes_expr(books, "embedding")).alias("codes"),

@@ -314,7 +314,7 @@ def neardup_sink(
             # this epoch are already fully written — replay is a no-op
             return
         base_b, _sig, banded_b = _portable_sig_bands(
-            batch_df, text_col, id_col, num_hashes, bands, ngram, True
+            batch_df, text_col, id_col, num_hashes, bands, ngram
         )
         # the batch bands table has 4+ consumers (prefix collect,
         # candidate join, within-batch pairs, state write) — persist
@@ -545,7 +545,7 @@ def neardup_replay_chunks(
     for t in range(n_chunks):
         chunk = docs.filter(F.col(chunk_col) == t)
         base_b, _sig, banded_b = _portable_sig_bands(
-            chunk, text_col, id_col, num_hashes, bands, ngram, True
+            chunk, text_col, id_col, num_hashes, bands, ngram
         )
         persisted.append(base_b)
         bands_b = banded_b.select("doc", "band", "bh")

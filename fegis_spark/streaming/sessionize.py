@@ -21,7 +21,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import DataStreamWriter
 
 
 def sessionize_batch(
@@ -117,11 +116,6 @@ def tumbling_counts_stream(
             "total_value",
         )
     )
-
-
-def stream_to_memory_sink(df: DataFrame, name: str) -> DataStreamWriter:
-    """Test harness sink: in-memory table, complete/append per query."""
-    return df.writeStream.format("memory").queryName(name).outputMode("append")
 
 
 def assign_sequence_stream(

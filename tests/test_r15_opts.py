@@ -10,6 +10,7 @@
 from __future__ import annotations
 
 import datetime as dt
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -119,7 +120,7 @@ def test_minhash_verify_bcast_gate_values_identical(spark):
         "doc_id long, text string",
     )
     base, _sig, banded = _portable_sig_bands(
-        docs, "text", "doc_id", 16, 4, 3, cache_intermediate=False
+        docs, "text", "doc_id", 16, 4, 3
     )
     cand = banded_candidate_pairs(banded, max_bucket_size=None)
     sh = base.select("doc", "sh")
@@ -174,7 +175,9 @@ def test_banded_candidate_pairs_capped_agg_form(spark):
         )
     )
     # one bucket exchange + the distinct exchange; no window, no join
-    assert p.count("(") > 0 and "Window" not in p and "Join" not in p
+    exchanges = re.findall(r"^\(\d+\) Exchange$", p, re.MULTILINE)
+    assert len(exchanges) == 2, p
+    assert "Window" not in p and "Join" not in p
 
 
 def test_banded_candidate_pairs_payload_agg_form(spark):

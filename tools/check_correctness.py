@@ -5,6 +5,8 @@ then compares row count, sorted-by-name schema, and order-insensitive
 values. Stricter than a hash: exact value equality after normalization
 (floats compared exactly; any mismatch prints the worst offender so the
 query can be made deterministic, not fuzzed).
+Each query runs through catalog.run_query, so the persists it makes
+are released before the next query starts.
 
 Type-STRICT by default (r8, after the r7 driver FAIL on
 quantize_embeddings): the driver's value hash is type-sensitive, so a
@@ -30,7 +32,7 @@ import duckdb
 
 sys.path.insert(0, "/root/repo")
 
-from fegis_spark.catalog import catalog  # noqa: E402
+from fegis_spark.catalog import catalog, run_query  # noqa: E402
 from fegis_spark.model import TABLES  # noqa: E402
 from fegis_spark.session import configure_for_oracle, get_spark  # noqa: E402
 
@@ -120,14 +122,19 @@ def main() -> int:
     n_pass = n_fail = n_rowsonly = 0
     for name in names:
         e = entries[name]
+
+        def build(e=e):
+            return e.builder(spark, args.sf)
+
         try:
-            df = e.builder(spark, args.sf)
             if e.oracle is None:
-                cnt = df.count()
+                cnt = run_query(spark, build, lambda df: df.count())
                 print(f"ROWSONLY {name}: {cnt} rows")
                 n_rowsonly += 1
                 continue
-            errs = compare(name, df, con, e.oracle)
+            errs = run_query(
+                spark, build, lambda df, e=e: compare(e.name, df, con, e.oracle)
+            )
         except Exception as ex:  # noqa: BLE001
             errs = [f"EXCEPTION: {type(ex).__name__}: {ex}"]
         if errs:

@@ -28,9 +28,14 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from fegis_spark.operators.bm25 import clear_memos  # noqa: E402
+from fegis_spark.catalog import run_query  # noqa: E402
 from fegis_spark.session import configure_for_oracle, get_spark  # noqa: E402
-from scale_probe import replicate  # noqa: E402
+from scale_probe import (  # noqa: E402
+    noop_write_s,
+    replicate,
+    result_pairs,
+    timed_best2,
+)
 
 K = 10
 N_QUERIES = 32
@@ -86,18 +91,6 @@ def sweep(spark, factor: int, combos: list[tuple[int, int]],
         out["clustered"] = {"n": clustered[0], "n_clusters": clustered[1],
                             "sigma": 0.06, "generator": "make_clustered"}
 
-    def timed_best2(make_df) -> float:
-        best = None
-        for _ in range(2):
-            df = make_df()
-            t0 = time.time()
-            df.write.format("noop").mode("overwrite").save()
-            dt = time.time() - t0
-            best = dt if best is None else min(best, dt)
-            spark.catalog.clearCache()
-            clear_memos()
-        return round(best, 3)
-
     with tempfile.TemporaryDirectory(prefix="ivf_sweep_") as tmp:
         d = f"{tmp}/x{factor}"
         if clustered:
@@ -119,22 +112,22 @@ def sweep(spark, factor: int, combos: list[tuple[int, int]],
                 k=K,
             )
 
-        exact_df().write.format("noop").mode("overwrite").save()  # warm
-        spark.catalog.clearCache()
-        clear_memos()
-        t_exact = timed_best2(exact_df)
-        truth = {(r.query_id, r.corpus_id) for r in exact_df().collect()}
+        run_query(spark, exact_df, noop_write_s)  # warm
+        t_exact = timed_best2(spark, exact_df)
+        truth = run_query(spark, exact_df, result_pairs)
         out["exact_s"] = t_exact
 
         for n_lists, iters in combos:
             path = f"{tmp}/ivf_{n_lists}_{iters}"
             t0 = time.time()
-            build_ivf_index(
-                emb, path, "vec_id", n_lists=n_lists, kmeans_iters=iters
+            run_query(
+                spark,
+                lambda: emb,
+                lambda e: build_ivf_index(
+                    e, path, "vec_id", n_lists=n_lists, kmeans_iters=iters
+                ),
             )
             build_s = round(time.time() - t0, 3)
-            spark.catalog.clearCache()
-            clear_memos()
 
             def ivf_df(n_probe, _p=path):
                 return ann_ivf_indexed(
@@ -147,12 +140,10 @@ def sweep(spark, factor: int, combos: list[tuple[int, int]],
                 max(1, n_lists // 16), n_lists // 8, n_lists // 4,
                 n_lists // 2,
             })
-            ivf_df(probes[0]).write.format("noop").mode("overwrite").save()  # warm
-            spark.catalog.clearCache()
-            clear_memos()
+            run_query(spark, lambda: ivf_df(probes[0]), noop_write_s)  # warm
             for n_probe in probes:
-                t_ivf = timed_best2(lambda: ivf_df(n_probe))
-                got = {(r.query_id, r.corpus_id) for r in ivf_df(n_probe).collect()}
+                t_ivf = timed_best2(spark, lambda: ivf_df(n_probe))
+                got = run_query(spark, lambda: ivf_df(n_probe), result_pairs)
                 combo["probes"][f"n_probe={n_probe}"] = {
                     "scan_frac": round(n_probe / n_lists, 4),
                     "ivf_probe_s": t_ivf,
@@ -160,8 +151,6 @@ def sweep(spark, factor: int, combos: list[tuple[int, int]],
                     f"recall_at_{K}": round(len(truth & got) / len(truth), 4),
                 }
             out["combos"][f"n_lists={n_lists},iters={iters}"] = combo
-            spark.catalog.clearCache()
-            clear_memos()
     return out
 
 

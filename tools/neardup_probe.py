@@ -73,7 +73,7 @@ def _probe_once(spark, state_dir, batch_df, prune):
 
     committed = committed_epoch(state_dir)
     base_b, _sig, banded_b = _portable_sig_bands(
-        batch_df, "text", "doc_id", 16, 4, 3, True
+        batch_df, "text", "doc_id", 16, 4, 3
     )
     bands_b = banded_b.select("doc", "band", "bh").persist()
     bands_b.count()  # materialize the batch signature OUTSIDE the timing

@@ -22,11 +22,34 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from fegis_spark.catalog import run_query  # noqa: E402
 from fegis_spark.model import load_table  # noqa: E402
-from fegis_spark.operators.bm25 import clear_memos
 from fegis_spark.session import configure_for_oracle, get_spark  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.1"
+
+
+def noop_write_s(df) -> float:
+    """Wall seconds of a noop-sink write (full execution)."""
+    t0 = time.time()
+    df.write.format("noop").mode("overwrite").save()
+    return time.time() - t0
+
+
+def result_pairs(df) -> set:
+    """(query_id, corpus_id) pairs of a KNN result, for recall."""
+    return {(r.query_id, r.corpus_id) for r in df.collect()}
+
+
+def timed_best2(spark, make_df) -> float:
+    """Best of two runs, each a fresh query (run_query: the plan is
+    rebuilt and its persists released). Single measurements
+    occasionally catch a GC pause or shuffle-service hiccup and read
+    5-10x high on ONE query per run (observed bm25 1.0s -> 8.4s
+    between otherwise-clean runs); min over two fresh-plan timings is
+    the standard wall-noise floor and what the committed ratios
+    report."""
+    return round(min(run_query(spark, make_df, noop_write_s) for _ in range(2)), 3)
 
 
 def replicate(spark, out_dir: str, factor: int, perturb: bool = True) -> None:
@@ -115,9 +138,10 @@ def replicate(spark, out_dir: str, factor: int, perturb: bool = True) -> None:
 
 
 def probes(spark, sf_dir: str, only: set | None = None) -> dict:
-    """Heavy operators with non-trivial shuffle structure. `only`
-    restricts to a subset WITHOUT building the rest (some probe
-    builders run bounded driver jobs — bm25 stats — at build time)."""
+    """Heavy operators with non-trivial shuffle structure, as thunks
+    that build a fresh plan per call (some probe builders run bounded
+    driver jobs — bm25 stats — at build time). `only` restricts to a
+    subset."""
     from fegis_spark.operators.bm25 import bm25_topk
     from fegis_spark.operators.dedup import (
         banded_candidate_pairs,
@@ -204,7 +228,7 @@ def probes(spark, sf_dir: str, only: set | None = None) -> dict:
         "split_leakage_neardup": lambda: _split_leakage_probe(spark, sf_dir),
     }
     return {
-        name: t() for name, t in thunks.items() if only is None or name in only
+        name: t for name, t in thunks.items() if only is None or name in only
     }
 
 
@@ -295,34 +319,16 @@ def _substring_spans_probe(spark, sf_dir: str):
 
 
 def time_all(spark, sf_dir: str, only: set | None = None) -> dict[str, float]:
-    """Warm every probe once (codegen + JIT + page cache), then time a
-    FRESH plan per probe from a cold executor cache. The timed plan is
-    rebuilt immediately before ITS timing: clearCache() de-registers
-    every not-yet-materialized persist too, and a plan whose
-    InMemoryRelation was de-registered recomputes the whole upstream
-    subtree per consumer — measured 10-25× inflation on
-    winnow_match_pairs (3-consumer persist) before this fix."""
-    names = list(probes(spark, sf_dir, only))
-    for df in probes(spark, sf_dir, only).values():
-        df.write.format("noop").mode("overwrite").save()  # warm: codegen+JIT
-    spark.catalog.clearCache(); clear_memos()  # operators persist intermediates
-    out = {}
-    for name in names:
-        # best-of-2: single measurements occasionally catch a GC pause
-        # or shuffle-service hiccup and read 5-10x high on ONE query
-        # per run (observed bm25 1.0s -> 8.4s between otherwise-clean
-        # runs); min over two fresh-plan timings is the standard
-        # wall-noise floor and what the committed ratios report
-        best = None
-        for _ in range(2):
-            df = probes(spark, sf_dir, only)[name]  # fresh persist registration
-            t0 = time.time()
-            df.write.format("noop").mode("overwrite").save()
-            dt = time.time() - t0
-            best = dt if best is None else min(best, dt)
-            spark.catalog.clearCache(); clear_memos()
-        out[name] = round(best, 3)
-    return out
+    """Warm every probe once (codegen + JIT + page cache), then time
+    each one best-of-2 as a fresh query (timed_best2). Each run calls
+    its thunk again: clearCache() de-registers every not-yet-
+    materialized persist too, and a plan whose InMemoryRelation was
+    de-registered recomputes the whole upstream subtree per consumer
+    (measured 10-25x inflation on winnow_match_pairs)."""
+    thunks = probes(spark, sf_dir, only)
+    for build in thunks.values():
+        run_query(spark, build, noop_write_s)  # warm: codegen+JIT
+    return {name: timed_best2(spark, build) for name, build in thunks.items()}
 
 
 def ivf_ab(spark, factor: int = 16) -> dict:
@@ -342,17 +348,6 @@ def ivf_ab(spark, factor: int = 16) -> dict:
         "n_probe": 8,
         "legs": {},
     }
-
-    def timed_best2(make_df) -> float:
-        best = None
-        for _ in range(2):
-            df = make_df()
-            t0 = time.time()
-            df.write.format("noop").mode("overwrite").save()
-            dt = time.time() - t0
-            best = dt if best is None else min(best, dt)
-            spark.catalog.clearCache(); clear_memos()
-        return round(best, 3)
 
     with tempfile.TemporaryDirectory(prefix="ivf_ab_") as tmp:
         for leg, fac in (("x1", 1), (f"x{factor}", factor)):
@@ -375,9 +370,14 @@ def ivf_ab(spark, factor: int = 16) -> dict:
             queries = emb.filter(F.col("vec_id").isin(qids))
 
             t0 = time.time()
-            build_ivf_index(emb, f"{d}/ivf", "vec_id", n_lists=64, kmeans_iters=2)
+            run_query(
+                spark,
+                lambda: emb,
+                lambda e: build_ivf_index(
+                    e, f"{d}/ivf", "vec_id", n_lists=64, kmeans_iters=2
+                ),
+            )
             build_s = round(time.time() - t0, 3)
-            spark.catalog.clearCache(); clear_memos()
 
             def exact_df():
                 return knn_join(
@@ -391,11 +391,10 @@ def ivf_ab(spark, factor: int = 16) -> dict:
                 )
 
             # warm once (codegen/JIT), then best-of-2 fresh plans
-            exact_df().write.format("noop").mode("overwrite").save()
-            ivf_df(8).write.format("noop").mode("overwrite").save()
-            spark.catalog.clearCache(); clear_memos()
-            t_exact = timed_best2(exact_df)
-            truth = {(r.query_id, r.corpus_id) for r in exact_df().collect()}
+            run_query(spark, exact_df, noop_write_s)
+            run_query(spark, lambda: ivf_df(8), noop_write_s)
+            t_exact = timed_best2(spark, exact_df)
+            truth = run_query(spark, exact_df, result_pairs)
             leg_out = {
                 "n_vectors": n,
                 "build_s": build_s,
@@ -404,15 +403,14 @@ def ivf_ab(spark, factor: int = 16) -> dict:
             }
             # n_probe sweep on the SAME built index: the recall knob
             for n_probe in (8, 16):
-                t_ivf = timed_best2(lambda: ivf_df(n_probe))
-                got = {(r.query_id, r.corpus_id) for r in ivf_df(n_probe).collect()}
+                t_ivf = timed_best2(spark, lambda: ivf_df(n_probe))
+                got = run_query(spark, lambda: ivf_df(n_probe), result_pairs)
                 leg_out["probes"][f"n_probe={n_probe}"] = {
                     "ivf_probe_s": t_ivf,
                     "speedup": round(t_exact / t_ivf, 2),
                     "recall_at_3": round(len(truth & got) / len(truth), 4),
                 }
             out["legs"][leg] = leg_out
-            spark.catalog.clearCache(); clear_memos()
     x1, xn = out["legs"]["x1"], out["legs"][f"x{factor}"]
     out["exact_scale_ratio"] = round(xn["exact_s"] / x1["exact_s"], 2)
     out["ivf_scale_ratio_np8"] = round(
@@ -450,17 +448,6 @@ def pq_ab(spark, factor: int = 16) -> dict:
         "legs": {},
     }
 
-    def timed_best2(make_df) -> float:
-        best = None
-        for _ in range(2):
-            df = make_df()
-            t0 = time.time()
-            df.write.format("noop").mode("overwrite").save()
-            dt = time.time() - t0
-            best = dt if best is None else min(best, dt)
-            spark.catalog.clearCache(); clear_memos()
-        return round(best, 3)
-
     def tree_bytes(d: str) -> int:
         return sum(
             os.path.getsize(os.path.join(r, f))
@@ -494,7 +481,6 @@ def pq_ab(spark, factor: int = 16) -> dict:
                 F.expr(pq_codes_expr("embedding")).alias("codes"),
             ).write.mode("overwrite").parquet(f"{d}/pqcodes.parquet")
             build_s = round(time.time() - t0, 3)
-            spark.catalog.clearCache(); clear_memos()
 
             qluts = queries.select(
                 F.col("vec_id").alias("query_id"),
@@ -521,13 +507,12 @@ def pq_ab(spark, factor: int = 16) -> dict:
                     .select("query_id", "corpus_id")
                 )
 
-            exact_df().write.format("noop").mode("overwrite").save()
-            adc_df().write.format("noop").mode("overwrite").save()
-            spark.catalog.clearCache(); clear_memos()
-            t_exact = timed_best2(exact_df)
-            t_adc = timed_best2(adc_df)
-            truth = {(r.query_id, r.corpus_id) for r in exact_df().collect()}
-            got = {(r.query_id, r.corpus_id) for r in adc_df().collect()}
+            run_query(spark, exact_df, noop_write_s)
+            run_query(spark, adc_df, noop_write_s)
+            t_exact = timed_best2(spark, exact_df)
+            t_adc = timed_best2(spark, adc_df)
+            truth = run_query(spark, exact_df, result_pairs)
+            got = run_query(spark, adc_df, result_pairs)
             out["legs"][leg] = {
                 "n_vectors": n,
                 "codes_build_s": build_s,
@@ -538,7 +523,6 @@ def pq_ab(spark, factor: int = 16) -> dict:
                 "speedup": round(t_exact / t_adc, 2),
                 "recall_at_3": round(len(truth & got) / len(truth), 4),
             }
-            spark.catalog.clearCache(); clear_memos()
     x1, xn = out["legs"]["x1"], out["legs"][f"x{factor}"]
     out["exact_scale_ratio"] = round(xn["exact_s"] / x1["exact_s"], 2)
     out["adc_scale_ratio"] = round(xn["adc_s"] / x1["adc_s"], 2)
@@ -577,17 +561,6 @@ def topk_ab(spark, factor: int = 16) -> dict:
         "panel": 3,
         "legs": {},
     }
-
-    def timed_best2(make_df) -> float:
-        best = None
-        for _ in range(2):
-            df = make_df()
-            t0 = time.time()
-            df.write.format("noop").mode("overwrite").save()
-            dt = time.time() - t0
-            best = dt if best is None else min(best, dt)
-            spark.catalog.clearCache(); clear_memos()
-        return round(best, 3)
 
     with tempfile.TemporaryDirectory(prefix="topk_ab_") as tmp:
         for leg, fac in (("x1", 1), (f"x{factor}", factor)):
@@ -686,23 +659,28 @@ def topk_ab(spark, factor: int = 16) -> dict:
                     ).cast("bigint").alias("h"),
                 )
 
-            got = {(r[0], r[1], int(r[2])) for r in grouped_df().collect()}
-            want = {(r[0], r[1], int(r[2])) for r in window_df().collect()}
+            def hits(df) -> set:
+                return {(r[0], r[1], int(r[2])) for r in df.collect()}
+
+            def dual_hits(df) -> set:
+                return {(r[0], int(r[1])) for r in df.collect() if r[1]}
+
+            got = run_query(spark, grouped_df, hits)
+            want = run_query(spark, window_df, hits)
             assert got == want, "grouped_topk diverged from the window form"
             # the window form omits zero-hit queries (groupBy after
             # filter); the slice form emits h=0 rows — compare on the
             # positive-hit set
-            dg = {(r[0], int(r[1])) for r in dual_slice_df().collect() if r[1]}
-            dw = {(r[0], int(r[1])) for r in dual_window_df().collect()}
+            dg = run_query(spark, dual_slice_df, dual_hits)
+            dw = run_query(spark, dual_window_df, dual_hits)
             assert dg == dw, "dual-slice diverged from the dual-window form"
-            spark.catalog.clearCache(); clear_memos()
             out["legs"][leg] = {
                 "n_vectors": n,
                 "rows_identical": True,
-                "window_s": timed_best2(window_df),
-                "grouped_s": timed_best2(grouped_df),
-                "dual_window_s": timed_best2(dual_window_df),
-                "dual_slice_s": timed_best2(dual_slice_df),
+                "window_s": timed_best2(spark, window_df),
+                "grouped_s": timed_best2(spark, grouped_df),
+                "dual_window_s": timed_best2(spark, dual_window_df),
+                "dual_slice_s": timed_best2(spark, dual_slice_df),
             }
     x1, xn = out["legs"]["x1"], out["legs"][f"x{factor}"]
     out["window_scale_ratio"] = round(xn["window_s"] / x1["window_s"], 2)
@@ -746,17 +724,6 @@ def ntile_ab(spark, factor: int = 16) -> dict:
         "legs": {},
     }
 
-    def timed_best2(make_df) -> float:
-        best = None
-        for _ in range(2):
-            df = make_df()
-            t0 = time.time()
-            df.write.format("noop").mode("overwrite").save()
-            dt = time.time() - t0
-            best = dt if best is None else min(best, dt)
-            spark.catalog.clearCache(); clear_memos()
-        return round(best, 3)
-
     with tempfile.TemporaryDirectory(prefix="ntile_ab_") as tmp:
         for leg, fac in (("x1", 1), (f"x{factor}", factor)):
             d = f"{tmp}/{leg}"
@@ -792,16 +759,19 @@ def ntile_ab(spark, factor: int = 16) -> dict:
 
             n = base().count()
             if fac == 1:
-                got = {tuple(r) for r in sharded_df().collect()}
-                want = {tuple(r) for r in native_df().collect()}
+
+                def rows(df) -> set:
+                    return {tuple(r) for r in df.collect()}
+
+                got = run_query(spark, sharded_df, rows)
+                want = run_query(spark, native_df, rows)
                 assert got == want, "decomposition diverged from native window"
             else:
-                assert sharded_df().count() == n
-            spark.catalog.clearCache(); clear_memos()
+                assert run_query(spark, sharded_df, lambda df: df.count()) == n
             out["legs"][leg] = {
                 "n_docs": n,
-                "native_s": timed_best2(native_df),
-                "sharded_s": timed_best2(sharded_df),
+                "native_s": timed_best2(spark, native_df),
+                "sharded_s": timed_best2(spark, sharded_df),
             }
     x1, xn = out["legs"]["x1"], out["legs"][f"x{factor}"]
     out["native_scale_ratio"] = round(xn["native_s"] / x1["native_s"], 2)

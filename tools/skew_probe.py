@@ -61,8 +61,8 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from fegis_spark.catalog import run_query  # noqa: E402
 from fegis_spark.model import load_table  # noqa: E402
-from fegis_spark.operators.bm25 import clear_memos
 from fegis_spark.session import configure_for_oracle, get_spark  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.1"
@@ -206,26 +206,26 @@ def main() -> None:
             hot_dir = f"{td}/f{factor}"
             build_hot_corpus(spark, hot_dir, factor)
 
+            def hot_eval():
+                return eval_frame(spark, hot_dir)
+
             spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-            eval_frame(spark, hot_dir).collect()  # warm: codegen + shuffles
-            spark.catalog.clearCache(); clear_memos()
-            t_on, _ = run_timed(eval_frame(spark, hot_dir))
-            spark.catalog.clearCache(); clear_memos()
+            run_query(spark, hot_eval, run_timed)  # warm: codegen + shuffles
+            t_on, _ = run_query(spark, hot_eval, run_timed)
             spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
-            t_off, _ = run_timed(eval_frame(spark, hot_dir))
-            spark.catalog.clearCache(); clear_memos()
+            t_off, _ = run_query(spark, hot_eval, run_timed)
             spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-            t_on2, _ = run_timed(eval_frame(spark, hot_dir))
-            spark.catalog.clearCache(); clear_memos()
+            t_on2, _ = run_query(spark, hot_eval, run_timed)
             # skew-split marker, detected on the skewed gram-join
             # sub-frame. Broadcast is disabled for this detection run:
             # at probe scale Spark broadcasts the exploded gram side
             # (hiding the skew), while at 100 TB it cannot — the
             # shuffled join is the production shape being certified.
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-            t_truth, plan_truth = run_timed(truth_frame(spark, hot_dir))
+            t_truth, plan_truth = run_query(
+                spark, lambda: truth_frame(spark, hot_dir), run_timed
+            )
             spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-            spark.catalog.clearCache(); clear_memos()
             import re
 
             join_types = sorted(set(re.findall(r"\w*Join\w*", plan_truth)))
