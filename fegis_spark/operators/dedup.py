@@ -15,16 +15,63 @@ path; every hash is JVM-side xxhash64/md5):
 * embedding near-dup — cosine >= threshold pairs; brute force within
   blocks here, LSH (operators/knn.py) at scale.
 
+One body per sketch: MinHash (_minhash_sig_bands) and SimHash
+(_simhash_pairs) each serve both hash families, XXHASH64 (Spark-only,
+rows-only at the oracle gate) and MD5_60 (replayable in DuckDB); the
+family constant is the only difference. Every bucket→pair step in the
+LSH family goes through one emitter, _bucket_pairs.
+
 Determinism: all hashes are seeded constants; candidate pairs are
 ordered (a < b).
 """
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from fegis_spark.functions.vector import cosine
+
+
+class HashFamily(NamedTuple):
+    """An LSH hash family as Spark-SQL templates. ``gram`` hashes a
+    string expression ``{}`` to a BIGINT (MinHash gram, SimHash
+    token); ``seed`` re-hashes a BIGINT gram hash ``{gh}`` for seed
+    ``{i}``; ``band`` keys a band bucket from a comma-joined row
+    string ``{}``. SimHash fingerprints are ``bits`` wide, split into
+    4 bands of ``band_bits``."""
+
+    gram: str
+    seed: str
+    band: str
+    bits: int
+    band_bits: int
+
+
+#: 64-bit xxhash64 family: the fast path, Spark-only (DuckDB has no
+#: xxhash64), so queries on it are rows-only at the oracle gate.
+XXHASH64 = HashFamily(
+    gram="xxhash64({})",
+    seed="xxhash64({gh}, {i})",
+    band="xxhash64(concat_ws(',', {}))",
+    bits=64,
+    band_bits=16,
+)
+
+_H60 = "CAST(conv(substring(md5({}), 1, 15), 16, 10) AS BIGINT)"
+
+#: Portable family: a 60-bit integer from the first 15 hex chars of
+#: md5, so DuckDB replays every hash value-for-value (the oracle twins
+#: in queries/dedup.py spell the same arithmetic).
+MD5_60 = HashFamily(
+    gram=_H60,
+    seed=_H60.format("concat(CAST({gh} AS STRING), '-{i}')"),
+    band="md5(concat_ws(',', {}))",
+    bits=60,
+    band_bits=15,
+)
 
 
 def normalize_text(col: Column) -> Column:
@@ -119,6 +166,102 @@ def band_bucket_stats(banded: DataFrame, doc: str = "doc") -> DataFrame:
     )
 
 
+def _bucket_pairs(
+    banded: DataFrame,
+    keys: tuple[str, ...] = ("band", "bh"),
+    payload: tuple[str, ...] = (),
+    max_bucket_size: int | None = None,
+) -> DataFrame:
+    """The one bucket→pair step of the LSH family: rows (doc, *keys,
+    *payload) → one row (*keys, a, b, <c>_a..., <c>_b...) per member
+    pair of each bucket, with a < b. No distinct: banded_candidate_pairs
+    takes it over (a, b), winnow_match_pairs counts per pair. A bucket
+    is the set of rows sharing every key column; rows with a NULL key
+    are in no bucket.
+
+    a < b holds by construction in both branches, so a doc id that
+    appears twice never pairs with itself. The key columns stay in the
+    output so a caller can count distinct shared keys per pair (winnow).
+    Cap semantics: see banded_candidate_pairs.
+    """
+    pay = list(payload)
+    if max_bucket_size is None:
+        # band-ok: cap-routed — callers either pass max_bucket_size
+        # (buckets here are <= cap by construction) or declare their
+        # keyspace bound at the call site (broadcast_audit band rule)
+        l, r = banded.alias("l"), banded.alias("r")
+        on = [F.col(f"l.{k}") == F.col(f"r.{k}") for k in keys]
+        return l.join(r, [*on, F.col("l.doc") < F.col("r.doc")]).select(
+            *[F.col(f"l.{k}").alias(k) for k in keys],
+            F.col("l.doc").alias("a"),
+            F.col("r.doc").alias("b"),
+            *[F.col(f"l.{c}").alias(f"{c}_a") for c in pay],
+            *[F.col(f"r.{c}").alias(f"{c}_b") for c in pay],
+        )
+
+    # r15 opt (VERDICT r14 #5, guide §2.4): capped pair generation in
+    # ONE bucket exchange, map-side after the shuffle. The r12 window
+    # formulation (bucket_size/rep via Window over the exchange,
+    # filter small/big, self-join the small side, union the star side)
+    # relied on ReusedExchange to compute the upstream sketch pipeline
+    # once — but the executed plan shows ZERO ReusedExchange: AQE plans
+    # the self-join's build side as its own BroadcastExchange and the
+    # consumers' differing projections over the window break canonical
+    # equality, so the WHOLE sketch executed once per consumer (3x;
+    # plans/r15/dedup_minhash_lsh_before.txt). This form folds each
+    # bucket with collect_list and emits its pairs from ONE projection:
+    #   m <= cap: all m(m-1)/2 ordered pairs (sort_array gives a total
+    #             order, so x before y in the sorted array means
+    #             x.doc <= y.doc — the a < b filter below drops the
+    #             equal-doc pairs a repeated doc row would make);
+    #   m >  cap: star pairs to ds[0], the min-struct representative.
+    # One shuffle, one sketch execution, no persist barrier. Per-bucket
+    # memory is bounded: the pair array is <= cap(cap-1)/2 structs
+    # (all-pairs fires only at m <= cap) and the bucket array itself is
+    # m structs. The HOF projection is interpreted (r9 caveat) but runs
+    # once per BUCKET over candidate-bounded output — measured 1.25x
+    # faster than the window+self-join form at sf0.1. NULL keys are
+    # filtered up front, matching the join branch (NULL = NULL is not
+    # true there).
+    struct_fields = "'doc', doc" + "".join(f", '{c}', {c}" for c in pay)
+    pair_fields = (
+        "'a', x.doc, 'b', y.doc"
+        + "".join(f", '{c}_a', x.{c}" for c in pay)
+        + "".join(f", '{c}_b', y.{c}" for c in pay)
+    )
+    star_fields = (
+        "'a', ds[0].doc, 'b', x.doc"
+        + "".join(f", '{c}_a', ds[0].{c}" for c in pay)
+        + "".join(f", '{c}_b', x.{c}" for c in pay)
+    )
+    g = banded.filter(
+        " AND ".join(f"{k} IS NOT NULL" for k in keys)
+    ).groupBy(*keys).agg(
+        F.expr(
+            f"sort_array(collect_list(named_struct({struct_fields})))"
+        ).alias("ds"),
+        F.count("*").alias("m"),
+    )
+    pairs_expr = (
+        f"CASE WHEN m <= {max_bucket_size} THEN "
+        "flatten(transform(ds, (x, i) -> "
+        f"transform(slice(ds, i + 2, m), y -> named_struct({pair_fields})))) "
+        f"ELSE transform(slice(ds, 2, m), x -> named_struct({star_fields})) "
+        "END AS ps"
+    )
+    out_cols = (
+        [*keys, "p.a AS a", "p.b AS b"]
+        + [f"p.{c}_a AS {c}_a" for c in pay]
+        + [f"p.{c}_b AS {c}_b" for c in pay]
+    )
+    return (
+        g.selectExpr(*keys, pairs_expr)
+        .selectExpr(*keys, "explode(ps) AS p")
+        .selectExpr(*out_cols)
+        .filter("a < b")
+    )
+
+
 def banded_candidate_pairs(
     banded: DataFrame,
     payload: tuple[str, ...] = (),
@@ -135,7 +278,7 @@ def banded_candidate_pairs(
     i.e. 5e9 pairs out of one join key; AQE skew-split redistributes the
     partition but cannot shrink the output. With a cap:
 
-    * buckets with <= cap members self-join exactly as before;
+    * buckets with <= cap members emit all their pairs, as uncapped;
     * over-cap buckets emit STAR pairs to their min-doc representative
       — m-1 candidates instead of m(m-1)/2.
 
@@ -151,94 +294,9 @@ def banded_candidate_pairs(
     that report dedup results at scale should report that count.
     """
     pay = list(payload)
-
-    def _self_join(frame: DataFrame) -> DataFrame:
-        # band-ok: cap-routed — callers either pass max_bucket_size
-        # (buckets here are <= cap by construction) or declare their
-        # keyspace bound at the call site (broadcast_audit band rule)
-        l, r = frame.alias("l"), frame.alias("r")
-        return l.join(
-            r,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bh") == F.col("r.bh"))
-            & (F.col("l.doc") < F.col("r.doc")),
-        ).select(
-            F.col("l.doc").alias("a"),
-            F.col("r.doc").alias("b"),
-            *[F.col(f"l.{c}").alias(f"{c}_a") for c in pay],
-            *[F.col(f"r.{c}").alias(f"{c}_b") for c in pay],
-        )
-
-    if max_bucket_size is None:
-        return _self_join(banded).distinct()
-
-    # r15 opt (VERDICT r14 #5, guide §2.4): capped candidate generation
-    # in ONE (band, bh) exchange, map-side after the shuffle. The r12
-    # window formulation (bucket_size/rep via Window over the exchange,
-    # filter small/big, self-join the small side, union the star side)
-    # relied on ReusedExchange to compute the upstream sketch pipeline
-    # once — but the executed plan shows ZERO ReusedExchange: AQE plans
-    # the self-join's build side as its own BroadcastExchange and the
-    # consumers' differing projections over the window break canonical
-    # equality, so the WHOLE sketch (shingle explode -> seed hashes ->
-    # signature agg -> band explode) executed once per consumer (3x;
-    # plans/r15/dedup_minhash_lsh_before.txt). This form folds each
-    # bucket with collect_list and emits its pairs from ONE projection:
-    #   m <= cap: all m(m-1)/2 ordered pairs (sort_array gives a total
-    #             order; doc is unique within a bucket, so x before y
-    #             in the sorted array == x.doc < y.doc — identical to
-    #             the self-join's l.doc < r.doc);
-    #   m >  cap: star pairs to ds[0], the min-struct representative —
-    #             exactly the window form's min(struct(doc, *pay)).
-    # One shuffle, one sketch execution, no persist barrier. Per-bucket
-    # memory is bounded: the pair array is <= cap(cap-1)/2 structs
-    # (all-pairs fires only at m <= cap) and the bucket array itself is
-    # m structs — the same per-bucket state the window sort held. The
-    # HOF projection is interpreted (r9 caveat) but runs once per
-    # BUCKET over candidate-bounded output — measured 1.25x faster than
-    # the window+self-join form at sf0.1 and value-identical at caps
-    # 2/10/512 with and without payload. NULL (band, bh) keys are
-    # filtered up front: the previous small-path equi-join dropped
-    # them while the star path kept them — degenerate and unspecified;
-    # upstream generators never emit NULL keys, and the filter gives
-    # both routes one defined semantics (matching the uncapped join).
-    struct_fields = "'doc', doc" + "".join(f", '{c}', {c}" for c in pay)
-    pair_fields = (
-        "'a', x.doc, 'b', y.doc"
-        + "".join(f", '{c}_a', x.{c}" for c in pay)
-        + "".join(f", '{c}_b', y.{c}" for c in pay)
-    )
-    star_fields = (
-        "'a', ds[0].doc, 'b', x.doc"
-        + "".join(f", '{c}_a', ds[0].{c}" for c in pay)
-        + "".join(f", '{c}_b', x.{c}" for c in pay)
-    )
-    g = banded.filter(
-        F.col("band").isNotNull() & F.col("bh").isNotNull()
-    ).groupBy("band", "bh").agg(
-        F.expr(
-            f"sort_array(collect_list(named_struct({struct_fields})))"
-        ).alias("ds"),
-        F.count("*").alias("m"),
-    )
-    pairs_expr = (
-        f"CASE WHEN m <= {max_bucket_size} THEN "
-        "flatten(transform(ds, (x, i) -> "
-        f"transform(slice(ds, i + 2, m), y -> named_struct({pair_fields})))) "
-        "ELSE "
-        "transform(filter(ds, x -> x.doc != ds[0].doc), x -> "
-        f"named_struct({star_fields})) "
-        "END AS ps"
-    )
-    out_cols = (
-        ["p.a AS a", "p.b AS b"]
-        + [f"p.{c}_a AS {c}_a" for c in pay]
-        + [f"p.{c}_b AS {c}_b" for c in pay]
-    )
     return (
-        g.selectExpr(pairs_expr)
-        .selectExpr("explode(ps) AS p")
-        .selectExpr(*out_cols)
+        _bucket_pairs(banded, payload=payload, max_bucket_size=max_bucket_size)
+        .select("a", "b", *[f"{c}_a" for c in pay], *[f"{c}_b" for c in pay])
         .distinct()
     )
 
@@ -271,6 +329,155 @@ def keep_best_dedup(
     )
 
 
+def _minhash_sig_bands(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    num_hashes: int,
+    bands: int,
+    ngram: int,
+    seed_bcast_bound: int | None = None,
+    family: HashFamily = MD5_60,
+):
+    """The MinHash sketch, one body for both hash families: the
+    shingle table (`base`: doc, sh — persisted, it feeds the signature
+    build AND the verify joins), the wide signature table (`sig`: doc,
+    mh0..mh{k-1} — the estimator-audit query consumes it as an array)
+    and the banded signature table (`banded`: doc, band, bh). The hash
+    family is a pure function of the text, so signatures computed in
+    separate calls (e.g. corpus and batch sides of the incremental
+    form) are mutually consistent. Returns (base, sig, banded).
+
+    seed_bcast_bound: byte bound for the distinct-gram seed-hash
+    table's size-gated broadcast (see the inline comment at the seeds
+    join). Callers with an sf_dir pass
+    ``32 * table_bytes(sf_dir, "documents")`` — the honest expansion
+    bound: the seeds projection is ~136 B per DISTINCT gram (gh + 16
+    bigint seeds) vs >= ~5 compressed source bytes per gram INSTANCE,
+    so 32x source bytes upper-bounds it even at dedup ratio 1.
+    None -> no hint; AQE picks the strategy from runtime sizes.
+    """
+    from pyspark import StorageLevel
+
+    rows_per_band = num_hashes // bands
+    base = with_shingles(df, text_col, id_col, ngram).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    # signature via explode + codegen'd hashes + min-agg: the gram
+    # string is hashed ONCE, then the k family members re-hash that
+    # BIGINT with the seed — k string concats + k string hashes per
+    # gram replaced by 1 string hash + k re-hashes (measured ~1.4x on
+    # the whole xxhash64 pipeline at sf0.1; the HOF
+    # transform/array_min form is interpreted and ~10x slower). Every
+    # hash is one parsed SQL string, not a py4j Column chain per seed
+    # (CLAUDE.md driver-side plan-cost rule; the Column-form build
+    # alone profiled ~0.5 s of py4j round-trips).
+    ex = base.select("doc", F.explode("sh").alias("g")).selectExpr(
+        "doc", family.gram.format("g") + " AS gh"
+    )
+    # r14 opt (guide §1.2 "don't compute things twice" / §2.3): the
+    # num_hashes per-seed re-hashes are pure functions of gh, and the
+    # gram stream repeats each distinct gram ~10x at sf0.1 (260k
+    # instances / 27k distinct; duplicate-heavy corpora are the whole
+    # point of this operator) — so when the caller supplies a
+    # seed_bcast_bound, evaluate the seed hashes once per DISTINCT gh
+    # and attach them by a size-gated equi-join instead of paying
+    # 16 md5+conv per gram INSTANCE (profiled 12 us/row, ~3.2 s of the
+    # 4.6 s sf0.1 wall; values are bit-identical by construction).
+    # Under the gate the seeds table broadcasts (local plans keep
+    # their broadcast-only shape, ex stays doc-local so the doc
+    # partial-agg still collapses map-side); over it the hint is
+    # withheld and AQE picks from real sizes — the SMJ fallback trades
+    # one narrow gh exchange of the gram stream for 15/16 of the
+    # seed-hash CPU (~12 us vs ~0.1 us/row). seed_bcast_bound=None
+    # (tiny-side callers: streaming batch probes; the xxhash64 fast
+    # path, whose re-hash is cheap) keeps the inline per-instance form
+    # — on a few-doc batch the extra distinct+join stages would cost
+    # more latency than the hashes they save.
+    if seed_bcast_bound is not None:
+        from fegis_spark.model import maybe_broadcast
+
+        seeds = ex.select("gh").distinct().selectExpr(
+            "gh",
+            *[
+                family.seed.format(gh="gh", i=i) + f" AS __s{i}"
+                for i in range(num_hashes)
+            ],
+        )
+        sig = (
+            ex.join(maybe_broadcast(seeds, seed_bcast_bound), "gh")
+            .groupBy("doc")
+            .agg(*[F.min(f"__s{i}").alias(f"mh{i}") for i in range(num_hashes)])
+        )
+    else:
+        sig = ex.groupBy("doc").agg(
+            *[
+                F.expr(f"min({family.seed.format(gh='gh', i=i)})").alias(f"mh{i}")
+                for i in range(num_hashes)
+            ]
+        )
+    band_structs = ", ".join(
+        "named_struct('band', {b}, 'bh', {bh})".format(
+            b=b,
+            bh=family.band.format(
+                ", ".join(
+                    f"CAST(mh{b * rows_per_band + r} AS STRING)"
+                    for r in range(rows_per_band)
+                )
+            ),
+        )
+        for b in range(bands)
+    )
+    banded = sig.selectExpr(
+        "doc", f"explode(array({band_structs})) AS b"
+    ).selectExpr("doc", "b.band AS band", "b.bh AS bh")
+    return base, sig, banded
+
+
+def minhash_verify_pairs(
+    cand: DataFrame,
+    sh: DataFrame,
+    jaccard_threshold: float = 0.5,
+    sh_bcast_bound: int | None = None,
+) -> DataFrame:
+    """Exact-Jaccard verification of candidate pairs (a, b) against a
+    shingle table (doc, sh) — the tail of every MinHash pipeline, also
+    used by callers holding PRECOMPUTED bands/shingles (the streaming
+    near-dup body) to verify within-set pairs without recomputing
+    signatures. Output: (a, b, jaccard) at >= threshold.
+
+    sh_bcast_bound (r15 opt, guide §3.1/§2.4): byte bound for a
+    size-gated broadcast of the shingle table into the two attach
+    joins — under the gate the candidate-pair table stops being
+    shuffled twice (once per attach key) and both joins become
+    broadcast hash joins over the persisted shingle cache; over the
+    gate (corpus-proportional at real scale) the hint is withheld and
+    AQE decides. Callers with an sf_dir pass
+    ``32 * table_bytes(sf_dir, "documents")`` — the distinct-shingle
+    arrays are ~20 B per gram INSTANCE upper bound vs >= ~5 compressed
+    source bytes per instance, so 32x source parquet bytes bounds the
+    exploded array representation honestly. None keeps the plain
+    shuffle joins."""
+    if sh_bcast_bound is not None:
+        from fegis_spark.model import maybe_broadcast
+
+        sh = maybe_broadcast(sh, sh_bcast_bound)
+    return (
+        cand.join(sh.select(F.col("doc").alias("a"), F.col("sh").alias("sh_a")), "a")
+        .join(sh.select(F.col("doc").alias("b"), F.col("sh").alias("sh_b")), "b")
+        .withColumn(
+            "jaccard",
+            F.size(F.array_intersect("sh_a", "sh_b"))
+            / (
+                F.size("sh_a") + F.size("sh_b")
+                - F.size(F.array_intersect("sh_a", "sh_b"))
+            ),
+        )
+        .filter(F.col("jaccard") >= jaccard_threshold)
+        .select("a", "b", F.round("jaccard", 6).alias("jaccard"))
+    )
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str,
@@ -282,7 +489,7 @@ def minhash_lsh_pairs(
     max_bucket_size: int | None = 512,
     sh_bcast_bound: int | None = None,
 ) -> DataFrame:
-    """K9 MinHash+LSH near-dup pairs.
+    """K9 MinHash+LSH near-dup pairs on the XXHASH64 family.
 
     Plan: shingle → signature → explode into `bands` band-hashes →
     self-join on (band, band_hash) → distinct candidate pairs → exact
@@ -293,106 +500,109 @@ def minhash_lsh_pairs(
     buckets would otherwise emit m²/2 pairs): over-cap buckets route
     through their min-doc representative — see banded_candidate_pairs
     for the exact semantics and band_bucket_stats for the audit
-    surface. None disables the cap (the oracle-checked portable twin's
-    default).
+    surface. None disables the cap.
 
     The shingle table persists, because the plan uses it three times
     (signature + both sides of candidate verification) — at warehouse
     scale you would materialize signatures to a table instead;
-    MEMORY_AND_DISK is the single-job analog.
+    MEMORY_AND_DISK is the single-job analog. sh_bcast_bound: see
+    minhash_verify_pairs.
     """
-    from pyspark import StorageLevel
+    base, _sig, banded = _minhash_sig_bands(
+        df, text_col, id_col, num_hashes, bands, ngram, family=XXHASH64
+    )
+    cand = banded_candidate_pairs(banded, max_bucket_size=max_bucket_size)
+    return minhash_verify_pairs(
+        cand, base.select("doc", "sh"), jaccard_threshold,
+        sh_bcast_bound=sh_bcast_bound,
+    )
 
-    rows_per_band = num_hashes // bands
-    base = with_shingles(df, text_col, id_col, ngram).persist(
-        StorageLevel.MEMORY_AND_DISK
+
+def minhash_lsh_pairs_portable(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    num_hashes: int = 16,
+    bands: int = 4,
+    ngram: int = 3,
+    jaccard_threshold: float = 0.5,
+    max_bucket_size: int | None = None,
+    seed_bcast_bound: int | None = None,
+    sh_bcast_bound: int | None = None,
+):
+    """minhash_lsh_pairs on the MD5_60 family: every hash is a 60-bit
+    integer from the first 15 hex chars of md5, so DuckDB can replay
+    the entire pipeline value-for-value — the oracle-checked form of
+    the same body. The 16 per-seed md5s are evaluated once per
+    DISTINCT gram hash and attached by a size-gated join (r14 opt; see
+    seed_bcast_bound in _minhash_sig_bands).
+
+    max_bucket_size defaults to None (uncapped) so the DuckDB oracle
+    replays the candidate set exactly; pass a cap to get the same
+    hot-bucket representative routing as the fast path (the oracle
+    would then need the mirrored star logic).
+
+    sh_bcast_bound: size-gated broadcast of the shingle table into the
+    verify joins (see minhash_verify_pairs) — callers with an sf_dir
+    pass the same 32x documents bound as seed_bcast_bound.
+    """
+    base, _sig, banded = _minhash_sig_bands(
+        df, text_col, id_col, num_hashes, bands, ngram,
+        seed_bcast_bound=seed_bcast_bound,
     )
-    # signature via explode + codegen'd hashes + min-agg: the gram
-    # string is hashed ONCE (xxhash64 over ~20 variable bytes), then
-    # the k family members re-hash that 8-byte base with the seed
-    # column — k string concats + k string hashes per gram replaced by
-    # 1 string hash + k fixed-width hashes (measured ~1.4x on the
-    # whole pipeline at sf0.1; the HOF transform/array_min form is
-    # interpreted and ~10x slower than either)
-    # single-string spellings (r14 opt): the Column-chain form of the
-    # 16 seed aggregates + 4 band structs costs ~0.3-0.4 s of py4j
-    # round-trips per plan build (CLAUDE.md driver-side plan-cost rule)
-    ex = base.select("doc", F.explode("sh").alias("g")).selectExpr(
-        "doc", "xxhash64(g) AS gh"
+    cand = banded_candidate_pairs(banded, max_bucket_size=max_bucket_size)
+    return minhash_verify_pairs(
+        cand, base.select("doc", "sh"), jaccard_threshold,
+        sh_bcast_bound=sh_bcast_bound,
     )
-    sig = ex.groupBy("doc").agg(
+
+
+def _simhash_pairs(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    max_hamming: int,
+    max_bucket_size: int | None,
+    family: HashFamily,
+) -> DataFrame:
+    """The SimHash sketch, one body for both hash families: per-bit
+    sign of the summed token-hash bits (family.bits wide), blocked on
+    4 bands of family.band_bits — any pair within hamming <= 3 shares
+    >= 1 exact band by pigeonhole; wider distances trade recall — and
+    verified with bit_count(xor). One bit-counter agg shuffle on doc,
+    band bucket pairs, candidate-only verify. The token hash is
+    projected once per token and the 64 (60) counters are codegen'd
+    sums, so the whole sketch stays in whole-stage codegen."""
+    bits, width = family.bits, family.band_bits
+    ex = df.select(
+        F.col(id_col).alias("doc"), F.explode(tokens(F.col(text_col))).alias("t")
+    ).selectExpr("doc", family.gram.format("t") + " AS th")
+    counters = ex.groupBy("doc").agg(
         *[
-            F.expr(f"min(xxhash64(gh, {i}))").alias(f"mh{i}")
-            for i in range(num_hashes)
+            F.expr(f"sum(CAST((shiftright(th, {b}) & 1) * 2 - 1 AS BIGINT)) AS c{b}")
+            for b in range(bits)
         ]
     )
+    # disjoint bit contributions — OR == sum
+    sim = " | ".join(
+        f"IF(c{b} > 0, shiftleft(CAST(1 AS BIGINT), {b}), CAST(0 AS BIGINT))"
+        for b in range(bits)
+    )
     band_structs = ", ".join(
-        "named_struct('band', {b}, 'bh', xxhash64(concat_ws(',', {cols})))".format(
-            b=b,
-            cols=", ".join(
-                f"CAST(mh{b * rows_per_band + r} AS STRING)"
-                for r in range(rows_per_band)
-            ),
-        )
-        for b in range(bands)
+        f"named_struct('band', {b}, 'bh', "
+        f"shiftright(sim, {width * b}) & {(1 << width) - 1})"
+        for b in range(4)
     )
-    banded = sig.selectExpr(
-        "doc", f"explode(array({band_structs})) AS b"
-    ).selectExpr("doc", "b.band AS band", "b.bh AS bh")
-    cand = banded_candidate_pairs(banded, max_bucket_size=max_bucket_size)
-    sh = base.select(F.col("doc"), F.col("sh"))
-    # r15 opt (guide §3.1/§2.4): size-gated broadcast of the persisted
-    # shingle cache into the verify attach joins — under the gate the
-    # candidate table stops being shuffled once per attach key; over
-    # it (corpus-proportional) AQE decides. Same convention and bound
-    # as minhash_verify_pairs.
-    if sh_bcast_bound is not None:
-        from fegis_spark.model import maybe_broadcast
-
-        sh = maybe_broadcast(sh, sh_bcast_bound)
-    verified = (
-        cand.join(sh.select(F.col("doc").alias("a"), F.col("sh").alias("sh_a")), "a")
-        .join(sh.select(F.col("doc").alias("b"), F.col("sh").alias("sh_b")), "b")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("sh_a", "sh_b"))
-            / F.size(F.array_union("sh_a", "sh_b")),
-        )
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        .select("a", "b", F.round("jaccard", 6).alias("jaccard"))
+    bands = counters.selectExpr("doc", f"{sim} AS sim").selectExpr(
+        "doc", "sim", f"inline(array({band_structs}))"
     )
-    return verified
-
-
-def simhash64(tok: Column) -> Column:
-    """64-bit SimHash: per-bit sign of summed token-hash bits.
-
-    aggregate(tokens) builds 64 counters via zip_with (+1/-1 per bit of
-    xxhash64(token)), then folds the sign vector into one long. Pure
-    Column expressions — whole-stage codegen, no UDF."""
-    counters = F.aggregate(
-        tok,
-        F.array_repeat(F.lit(0).cast("long"), 64),
-        lambda acc, t: F.zip_with(
-            acc,
-            F.array(
-                *[
-                    (F.shiftright(F.xxhash64(t), b).bitwiseAND(1) * 2 - 1).cast("long")
-                    for b in range(64)
-                ]
-            ),
-            lambda a, x: a + x,
-        ),
+    cand = banded_candidate_pairs(
+        bands, payload=("sim",), max_bucket_size=max_bucket_size
     )
-    # disjoint bit contributions — sum == OR
-    return sum(
-        [
-            F.when(counters[b] > 0, F.shiftleft(F.lit(1).cast("long"), b)).otherwise(
-                F.lit(0).cast("long")
-            )
-            for b in range(64)
-        ],
-        F.lit(0).cast("long"),
+    return (
+        cand.withColumn("hamming", F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b"))))
+        .filter(F.col("hamming") <= max_hamming)
+        .select("a", "b", "hamming")
     )
 
 
@@ -403,58 +613,28 @@ def simhash_pairs(
     max_hamming: int = 8,
     max_bucket_size: int | None = 512,
 ) -> DataFrame:
-    """K9 SimHash near-dup: block on equal 16-bit band (4 bands — any
-    pair within hamming<=3 of 64 bits shares >=1 exact band by
-    pigeonhole; wider distances trade recall), verify hamming via
-    bit_count(xor). max_bucket_size routes hot band buckets through a
-    min-doc representative (see banded_candidate_pairs); None disables."""
-    # explode + 64 codegen'd bit-counter aggregates (the HOF fold form
-    # simhash64() is kept for expression composability but is
-    # interpreted — this form stays in whole-stage codegen)
-    ex = df.select(
-        F.col(id_col).alias("doc"), F.explode(tokens(F.col(text_col))).alias("t")
+    """K9 SimHash-64 near-dup on the XXHASH64 family: 4 bands of 16
+    bits, hamming via bit_count(xor). max_bucket_size routes hot band
+    buckets through a min-doc representative (see
+    banded_candidate_pairs); None disables."""
+    return _simhash_pairs(
+        df, text_col, id_col, max_hamming, max_bucket_size, XXHASH64
     )
-    h = F.xxhash64("t")
-    counters = ex.groupBy("doc").agg(
-        *[
-            F.sum((F.shiftright(h, b).bitwiseAND(1) * 2 - 1).cast("long")).alias(f"c{b}")
-            for b in range(64)
-        ]
-    )
-    sim = sum(
-        [
-            F.when(F.col(f"c{b}") > 0, F.shiftleft(F.lit(1).cast("long"), b)).otherwise(
-                F.lit(0).cast("long")
-            )
-            for b in range(64)
-        ],
-        F.lit(0).cast("long"),
-    )
-    sh = counters.select("doc", sim.alias("sim"))
-    bands = sh.select(
-        "doc",
-        "sim",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftright(F.col("sim"), 16 * b)
-                        .bitwiseAND(0xFFFF)
-                        .alias("bh"),
-                    )
-                    for b in range(4)
-                ]
-            )
-        ).alias("b"),
-    ).select("doc", "sim", F.col("b.band").alias("band"), F.col("b.bh").alias("bh"))
-    cand = banded_candidate_pairs(
-        bands, payload=("sim",), max_bucket_size=max_bucket_size
-    )
-    return (
-        cand.withColumn("hamming", F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b"))))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("a", "b", "hamming")
+
+
+def simhash_pairs_portable(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    max_hamming: int = 3,
+    max_bucket_size: int | None = None,
+) -> DataFrame:
+    """simhash_pairs on the MD5_60 family: a 60-bit sketch from
+    md5-derived token hashes, blocked on 4x15-bit bands (pigeonhole-
+    exact for hamming <= 3). DuckDB replays every step value-for-value,
+    so this is the oracle-checked form of the same body."""
+    return _simhash_pairs(
+        df, text_col, id_col, max_hamming, max_bucket_size, MD5_60
     )
 
 
@@ -479,7 +659,7 @@ def ngram_jaccard_pairs(
     ``shingle_base`` (r15 opt, guide §1.2 "don't compute twice"):
     callers that already hold the (doc, sh) distinct-shingle table for
     the SAME (df, text_col, id_col, ngram) — e.g. dedup_minhash_eval,
-    whose prediction side persists it via _portable_sig_bands — pass
+    whose prediction side persists it via _minhash_sig_bands — pass
     it here so the tokenize+NGram corpus pass is not rebuilt for the
     truth side. Only valid with empty block_cols/payload_cols (the
     precomputed table carries no extra columns); the shingle family
@@ -622,8 +802,9 @@ def embedding_neardup_pairs_lsh(
     therefore the CANDIDATE SET are exactly MLlib's (model.transform
     emits the same hashes approxSimilarityJoin joins on), but the pair
     join itself is re-expressed natively: explode to one NARROW
-    (id, table, bucket) row per hash, equi-join on (table, bucket)
-    carrying only ids, distinct, then re-attach vectors and verify
+    (doc, band = hash table, bh = bucket) row per hash, the uncapped
+    banded_candidate_pairs bucket self-join carrying only ids
+    (distinct), then re-attach vectors and verify
     with per-side precomputed norms + one HOF dot per pair
     (cosine_from_parts_sql — bit-identical). approxSimilarityJoin
     shuffles the full row struct (raw vector + features + 12 hash
@@ -671,11 +852,11 @@ def embedding_neardup_pairs_lsh(
 
     hashed = (
         model.transform(feat)
-        .select("id", F.posexplode("hashes").alias("t", "__hv"))
+        .select(F.col("id").alias("doc"), F.posexplode("hashes").alias("band", "__hv"))
         .select(
-            "id",
-            "t",
-            vector_to_array("__hv").getItem(0).cast("bigint").alias("bkt"),
+            "doc",
+            "band",
+            vector_to_array("__hv").getItem(0).cast("bigint").alias("bh"),
         )
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
@@ -683,17 +864,7 @@ def embedding_neardup_pairs_lsh(
     # recall-conservative MLlib BRP bucket join this re-expresses
     # (~brute force via the giant bucket, evidence/brp_occupancy_r11);
     # scale paths are IVF / capped SRP (docstring above)
-    cand = (
-        hashed.alias("l")  # band-ok: correctness-tier, ~brute force (above)
-        .join(
-            hashed.alias("r"),
-            (F.col("l.t") == F.col("r.t"))
-            & (F.col("l.bkt") == F.col("r.bkt"))
-            & (F.col("l.id") < F.col("r.id")),
-        )
-        .select(F.col("l.id").alias("a"), F.col("r.id").alias("b"))
-        .distinct()
-    )
+    cand = banded_candidate_pairs(hashed)
     # norms once per vector (value identical to folding them per pair;
     # HOF fold spelling — the unrolled form measured 2x the CPU, r14)
     sides = base.select(
@@ -1111,262 +1282,6 @@ def connected_components_star(
     return members.union(roots)
 
 
-def _portable_sig_bands(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_hashes: int,
-    bands: int,
-    ngram: int,
-    seed_bcast_bound: int | None = None,
-):
-    """Shared md5-60bit MinHash pipeline: shingle table (`base`: doc,
-    sh — persisted, it feeds the signature
-    build AND the verify joins), the wide signature table (`sig`: doc,
-    mh0..mh{k-1} — the estimator-audit query consumes it as an array)
-    and the banded signature table (`banded`: doc, band, bh). The hash
-    family is a pure function of the text, so signatures computed in
-    separate calls (e.g. corpus and batch sides of the incremental
-    form) are mutually consistent. Returns (base, sig, banded).
-
-    seed_bcast_bound: byte bound for the distinct-gram seed-hash
-    table's size-gated broadcast (see the inline comment at the seeds
-    join). Callers with an sf_dir pass
-    ``32 * table_bytes(sf_dir, "documents")`` — the honest expansion
-    bound: the seeds projection is ~136 B per DISTINCT gram (gh + 16
-    bigint seeds) vs >= ~5 compressed source bytes per gram INSTANCE,
-    so 32x source bytes upper-bounds it even at dedup ratio 1.
-    None -> no hint; AQE picks the strategy from runtime sizes.
-    """
-    from pyspark import StorageLevel
-
-    rows_per_band = num_hashes // bands
-    base = with_shingles(df, text_col, id_col, ngram).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-
-    # Spark-SQL string spelling of the portable 60-bit hash (first 15
-    # md5 hex chars → bigint) — single parsed expressions instead of a
-    # py4j Column chain per seed (CLAUDE.md driver-side plan-cost rule;
-    # the Column-form build alone profiled ~0.5 s of py4j round-trips).
-    def h60s(c: str) -> str:
-        return f"CAST(conv(substring(md5({c}), 1, 15), 16, 10) AS BIGINT)"
-
-    ex = base.select("doc", F.explode("sh").alias("g")).selectExpr(
-        "doc", h60s("g") + " AS gh"
-    )
-    # r14 opt (guide §1.2 "don't compute things twice" / §2.3): the
-    # num_hashes per-seed re-hashes are pure functions of gh, and the
-    # gram stream repeats each distinct gram ~10x at sf0.1 (260k
-    # instances / 27k distinct; duplicate-heavy corpora are the whole
-    # point of this operator) — so when the caller supplies a
-    # seed_bcast_bound, evaluate the seed hashes once per DISTINCT gh
-    # and attach them by a size-gated equi-join instead of paying
-    # 16 md5+conv per gram INSTANCE (profiled 12 us/row, ~3.2 s of the
-    # 4.6 s sf0.1 wall; values are bit-identical by construction).
-    # Under the gate the seeds table broadcasts (local plans keep
-    # their broadcast-only shape, ex stays doc-local so the doc
-    # partial-agg still collapses map-side); over it the hint is
-    # withheld and AQE picks from real sizes — the SMJ fallback trades
-    # one narrow gh exchange of the gram stream for 15/16 of the
-    # seed-hash CPU (~12 us vs ~0.1 us/row). seed_bcast_bound=None
-    # (tiny-side callers: streaming batch probes) keeps the inline
-    # per-instance form — on a few-doc batch the extra distinct+join
-    # stages would cost more latency than the md5s they save.
-    if seed_bcast_bound is not None:
-        from fegis_spark.model import maybe_broadcast
-
-        seeds = ex.select("gh").distinct().selectExpr(
-            "gh",
-            *[
-                h60s(f"concat(CAST(gh AS STRING), '-{i}')") + f" AS __s{i}"
-                for i in range(num_hashes)
-            ],
-        )
-        sig = (
-            ex.join(maybe_broadcast(seeds, seed_bcast_bound), "gh")
-            .groupBy("doc")
-            .agg(*[F.min(f"__s{i}").alias(f"mh{i}") for i in range(num_hashes)])
-        )
-    else:
-        sig = ex.groupBy("doc").agg(
-            *[
-                F.min(
-                    F.expr(h60s(f"concat(CAST(gh AS STRING), '-{i}')"))
-                ).alias(f"mh{i}")
-                for i in range(num_hashes)
-            ]
-        )
-    band_structs = ", ".join(
-        "named_struct('band', {b}, 'bh', md5(concat_ws(',', {cols})))".format(
-            b=b,
-            cols=", ".join(
-                f"CAST(mh{b * rows_per_band + r} AS STRING)"
-                for r in range(rows_per_band)
-            ),
-        )
-        for b in range(bands)
-    )
-    banded = sig.selectExpr(
-        "doc", f"explode(array({band_structs})) AS b"
-    ).selectExpr("doc", "b.band AS band", "b.bh AS bh")
-    return base, sig, banded
-
-
-def minhash_lsh_pairs_portable(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_hashes: int = 16,
-    bands: int = 4,
-    ngram: int = 3,
-    jaccard_threshold: float = 0.5,
-    max_bucket_size: int | None = None,
-    seed_bcast_bound: int | None = None,
-    sh_bcast_bound: int | None = None,
-):
-    """K9 MinHash+LSH with ENGINE-PORTABLE hashes: every hash is a
-    60-bit integer from the first 15 hex chars of md5, so DuckDB can
-    replay the entire pipeline value-for-value — this is the
-    oracle-checked twin of minhash_lsh_pairs (whose xxhash64 family is
-    Spark-only and therefore rows-only at the gate). Same plan shape:
-    shingle → per-seed min-agg signature → banded equi-join →
-    candidate-only exact-Jaccard verify. The 16 per-seed md5s are
-    evaluated once per DISTINCT gram hash and attached by a size-gated
-    join (r14 opt; see _portable_sig_bands and seed_bcast_bound there)
-    — keep the xxhash64 form on the 100 TB data path and this one as
-    the cross-engine verification surface.
-
-    The shingle table persists (used by the signature build and both
-    verify sides).
-
-    max_bucket_size defaults to None (uncapped) so the DuckDB oracle
-    replays the candidate set exactly; pass a cap to get the same
-    hot-bucket representative routing as the fast path (the oracle
-    would then need the mirrored star logic).
-
-    sh_bcast_bound: size-gated broadcast of the shingle table into the
-    verify joins (see minhash_verify_pairs) — callers with an sf_dir
-    pass the same 32x documents bound as seed_bcast_bound.
-    """
-    base, _sig, banded = _portable_sig_bands(
-        df, text_col, id_col, num_hashes, bands, ngram,
-        seed_bcast_bound=seed_bcast_bound,
-    )
-    cand = banded_candidate_pairs(banded, max_bucket_size=max_bucket_size)
-    return minhash_verify_pairs(
-        cand, base.select("doc", "sh"), jaccard_threshold,
-        sh_bcast_bound=sh_bcast_bound,
-    )
-
-
-def minhash_verify_pairs(
-    cand: DataFrame,
-    sh: DataFrame,
-    jaccard_threshold: float = 0.5,
-    sh_bcast_bound: int | None = None,
-) -> DataFrame:
-    """Exact-Jaccard verification of candidate pairs (a, b) against a
-    shingle table (doc, sh) — the tail of minhash_lsh_pairs_portable,
-    factored out (r13) so callers holding PRECOMPUTED bands/shingles
-    (the streaming near-dup body) generate within-set pairs without
-    recomputing signatures. Output: (a, b, jaccard) at >= threshold.
-
-    sh_bcast_bound (r15 opt, guide §3.1/§2.4): byte bound for a
-    size-gated broadcast of the shingle table into the two attach
-    joins — under the gate the candidate-pair table stops being
-    shuffled twice (once per attach key) and both joins become
-    broadcast hash joins over the persisted shingle cache; over the
-    gate (corpus-proportional at real scale) the hint is withheld and
-    AQE decides. Callers with an sf_dir pass
-    ``32 * table_bytes(sf_dir, "documents")`` — the distinct-shingle
-    arrays are ~20 B per gram INSTANCE upper bound vs >= ~5 compressed
-    source bytes per instance, so 32x source parquet bytes bounds the
-    exploded array representation honestly. None keeps the plain
-    shuffle joins."""
-    if sh_bcast_bound is not None:
-        from fegis_spark.model import maybe_broadcast
-
-        sh = maybe_broadcast(sh, sh_bcast_bound)
-    return (
-        cand.join(sh.select(F.col("doc").alias("a"), F.col("sh").alias("sh_a")), "a")
-        .join(sh.select(F.col("doc").alias("b"), F.col("sh").alias("sh_b")), "b")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("sh_a", "sh_b"))
-            / (
-                F.size("sh_a") + F.size("sh_b")
-                - F.size(F.array_intersect("sh_a", "sh_b"))
-            ),
-        )
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        .select("a", "b", F.round("jaccard", 6).alias("jaccard"))
-    )
-
-
-def simhash_pairs_portable(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    max_hamming: int = 3,
-    max_bucket_size: int | None = None,
-) -> DataFrame:
-    """K9 SimHash with ENGINE-PORTABLE hashes: 60-bit sketch from
-    md5-derived token hashes (first 15 hex chars → bigint), blocked on
-    4×15-bit bands — pigeonhole-exact for hamming <= 3 — and verified
-    with bit_count(xor). DuckDB replays every step value-for-value, so
-    this is the oracle-checked twin certifying the (xxhash64, 64-bit,
-    rows-only) simhash_pairs algebra. Same plan: one 60-counter agg
-    shuffle on doc, band equi-join, candidate-only verify."""
-    ex = df.select(
-        F.col(id_col).alias("doc"), F.explode(tokens(F.col(text_col))).alias("t")
-    )
-    th = F.conv(F.substring(F.md5(F.col("t")), 1, 15), 16, 10).cast("bigint")
-    counters = ex.groupBy("doc").agg(
-        *[
-            F.sum((F.shiftright(th, b).bitwiseAND(1) * 2 - 1).cast("long")).alias(f"c{b}")
-            for b in range(60)
-        ]
-    )
-    sim = sum(
-        [
-            F.when(F.col(f"c{b}") > 0, F.shiftleft(F.lit(1).cast("long"), b)).otherwise(
-                F.lit(0).cast("long")
-            )
-            for b in range(60)
-        ],
-        F.lit(0).cast("long"),
-    )
-    sh = counters.select("doc", sim.alias("sim"))
-    bands = sh.select(
-        "doc",
-        "sim",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftright(F.col("sim"), 15 * b)
-                        .bitwiseAND(0x7FFF)
-                        .alias("bh"),
-                    )
-                    for b in range(4)
-                ]
-            )
-        ).alias("b"),
-    ).select("doc", "sim", F.col("b.band").alias("band"), F.col("b.bh").alias("bh"))
-    cand = banded_candidate_pairs(
-        bands, payload=("sim",), max_bucket_size=max_bucket_size
-    )
-    return (
-        cand.withColumn(
-            "hamming", F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .select("a", "b", "hamming")
-    )
-
-
 # ---------------------------------------------------------------------------
 # Bloom prefilter for incremental dedup (the 100 TB anti-join shape)
 
@@ -1459,7 +1374,7 @@ def minhash_incremental_pairs_portable(
     """K9 incremental NEAR-dup: which new-batch documents are near-
     duplicates of the indexed corpus — the daily-ingest analog of
     `dedup_incremental`, one rung up from exact hashing. Both sides run
-    the shared md5-60bit MinHash pipeline (_portable_sig_bands — a pure
+    the shared md5-60bit MinHash pipeline (_minhash_sig_bands — a pure
     function of text, so separately-computed signatures are mutually
     consistent), then candidates come ONLY from the corpus-band ×
     batch-band equi-join: within-corpus and within-batch pairs are
@@ -1472,12 +1387,12 @@ def minhash_incremental_pairs_portable(
     computed per run (same pre-bucketing note as dedup_incremental).
     """
     # seed-dedup only on the corpus side (scale-proportional grams);
-    # the batch side keeps the inline form — see _portable_sig_bands
-    base_c, _sig_c, banded_c = _portable_sig_bands(
+    # the batch side keeps the inline form — see _minhash_sig_bands
+    base_c, _sig_c, banded_c = _minhash_sig_bands(
         corpus, text_col, id_col, num_hashes, bands, ngram,
         seed_bcast_bound=seed_bcast_bound,
     )
-    base_b, _sig_b, banded_b = _portable_sig_bands(
+    base_b, _sig_b, banded_b = _minhash_sig_bands(
         batch, text_col, id_col, num_hashes, bands, ngram
     )
     return minhash_incremental_pairs_precomputed(
@@ -1503,7 +1418,7 @@ def minhash_incremental_pairs_precomputed(
     bh) / (doc, sh) tables — the streaming state form (r12): the
     corpus side is the persisted index, only the batch side is
     computed per micro-batch. Signatures/shingles are pure functions
-    of text (_portable_sig_bands), so separately-computed sides are
+    of text (_minhash_sig_bands), so separately-computed sides are
     mutually consistent.
 
     ``max_bucket_size`` caps the CORPUS-side bucket fan-out (r13, the

@@ -209,7 +209,7 @@ def winnow_fp_sets(docs, text_col: str = "text", id_col: str = "doc_id"):
     the cross-doc match join (winnow_match_pairs)."""
     from pyspark.ml.feature import NGram
 
-    from fegis_spark.operators.dedup import tokens
+    from fegis_spark.operators.dedup import MD5_60, tokens
 
     # Scala NGram for the gram strings (2× the HOF slice/concat chain,
     # measured at sf0.1); only the per-gram md5 stays a HOF transform.
@@ -221,10 +221,7 @@ def winnow_fp_sets(docs, text_col: str = "text", id_col: str = "doc_id"):
         .transform(base)
         .select(
             "doc_id",
-            F.expr(
-                "transform(__g, g -> "
-                "CAST(conv(substring(md5(g), 1, 15), 16, 10) AS BIGINT))"
-            ).alias("__gh"),
+            F.expr(f"transform(__g, g -> {MD5_60.gram.format('g')})").alias("__gh"),
         )
     )
     return base.select(
@@ -248,31 +245,31 @@ def winnow_match_pairs(
     IS in this output (no MinHash-style false negatives for local
     matches).
 
-    Plan: fingerprint sets → explode to (doc, h), then pairs.
-    Uncapped: sets persisted MEMORY_AND_DISK (both sides of the
-    self-join read it), equi-join on the hash with doc_l < doc_r.
+    Plan: fingerprint sets → explode to (doc, h) → the LSH family's
+    bucket→pair emitter (dedup._bucket_pairs, bucket = the fingerprint
+    hash itself) → per-pair count. Uncapped, the emitter is the
+    equi-self-join on h with doc_l < doc_r.
 
     max_bucket_size is the same hot-bucket cap as
-    banded_candidate_pairs (band = the fingerprint hash itself): a
-    boilerplate fingerprint shared by m docs would emit m(m-1)/2 pairs
-    out of ONE join key — the quadratic output no partitioning trick
-    can shrink. Under the cap, hashes with <= cap members pair exactly
-    as before; over-cap hashes emit STAR rows to their min-doc
-    representative (m-1 instead of m²/2), so per-pair n_shared counts
-    only the fingerprints that actually generated the candidate.
-    r15: the capped branch folds pair generation into ONE groupBy(h)
-    (sort_array(collect_list) + per-bucket CASE emitting all-pairs or
-    star structs, multiplicity preserved — NO distinct, n_shared needs
-    one row per shared h), the same rewrite as banded_candidate_pairs:
-    the r12 window+self-join+union shape re-executed the
-    explode/exchange/sort/window once per consumer (zero ReusedExchange
-    in the executed plan). With the join gone the fingerprint subtree
-    has ONE consumer, but `sets` still persists in both branches: the
-    interpreted fps projection must materialize exactly once (see the
-    comment at the persist). Capped hashes are observable via
-    winnow_bucket_stats (the no-silent-caps rule). None = exact (the
-    oracle-checked default)."""
+    banded_candidate_pairs: a boilerplate fingerprint shared by m docs
+    would emit m(m-1)/2 pairs out of ONE join key — the quadratic
+    output no partitioning trick can shrink. Under the cap, hashes
+    with <= cap members pair exactly as before; over-cap hashes emit
+    STAR rows to their min-doc representative (m-1 instead of m²/2),
+    so per-pair n_shared counts only the fingerprints that actually
+    generated the candidate. The capped emitter is ONE groupBy(h)
+    fold (r15; the r12 window+self-join+union shape re-executed the
+    explode/exchange/sort/window once per consumer). Capped hashes are
+    observable via winnow_bucket_stats (the no-silent-caps rule).
+    None = exact (the oracle-checked default).
+
+    n_shared counts DISTINCT shared hashes per pair, so a doc id that
+    appears twice (a replayed row) cannot count one fingerprint twice
+    and push n_l + n_r - n_shared to zero; the emitter already rules
+    out the (d, d) self-pair."""
     from pyspark import StorageLevel
+
+    from fegis_spark.operators.dedup import _bucket_pairs
 
     # persisted in BOTH branches: beyond the uncapped join's two
     # consumers, the winnowing projection itself (interpreted HOF +
@@ -285,42 +282,28 @@ def winnow_match_pairs(
         .select("doc_id", F.size("fps").alias("n_fp"), "fps")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    ex = sets.select("doc_id", "n_fp", F.explode("fps").alias("h"))
-    if max_bucket_size is None:
-        l = ex.select(
-            F.col("doc_id").alias("doc_l"), F.col("n_fp").alias("n_l"), "h"
-        )
-        r = ex.select(
-            F.col("doc_id").alias("doc_r"), F.col("n_fp").alias("n_r"), "h"
-        )
-        cand = l.join(r, "h").filter(F.col("doc_l") < F.col("doc_r"))
-    else:
-        g = ex.filter(F.col("h").isNotNull()).groupBy("h").agg(
-            F.expr(
-                "sort_array(collect_list(named_struct('doc', doc_id, 'n', n_fp)))"
-            ).alias("ds"),
-            F.count("*").alias("m"),
-        )
-        pairs_expr = (
-            f"CASE WHEN m <= {max_bucket_size} THEN "
-            "flatten(transform(ds, (x, i) -> transform(slice(ds, i + 2, m), "
-            "y -> named_struct('doc_l', x.doc, 'n_l', x.n, "
-            "'doc_r', y.doc, 'n_r', y.n)))) "
-            "ELSE transform(filter(ds, x -> x.doc != ds[0].doc), x -> "
-            "named_struct('doc_l', ds[0].doc, 'n_l', ds[0].n, "
-            "'doc_r', x.doc, 'n_r', x.n)) END AS ps"
-        )
-        cand = (
-            g.selectExpr(pairs_expr)
-            .selectExpr("explode(ps) AS p")
-            .selectExpr(
-                "p.doc_l AS doc_l", "p.n_l AS n_l",
-                "p.doc_r AS doc_r", "p.n_r AS n_r",
-            )
-        )
+    ex = sets.select(
+        F.col("doc_id").alias("doc"), F.col("n_fp").alias("n"), F.explode("fps").alias("h")
+    )
+    cand = _bucket_pairs(
+        ex, keys=("h",), payload=("n",), max_bucket_size=max_bucket_size
+    )
+    # the same distinct count, spelled per branch for cost: after the
+    # capped fold the pairs are still hash-partitioned on h, so
+    # count(DISTINCT h) dedups there without another shuffle; behind the
+    # uncapped join (broadcast when the sets are small) it would add
+    # one, so that branch collects the set instead
+    n_shared = (
+        F.count_distinct("h")
+        if max_bucket_size is not None
+        else F.size(F.collect_set("h")).cast("bigint")
+    )
     return (
-        cand.groupBy("doc_l", "doc_r", "n_l", "n_r")
-        .agg(F.count("*").alias("n_shared"))
+        cand.groupBy(
+            F.col("a").alias("doc_l"), F.col("b").alias("doc_r"),
+            F.col("n_a").alias("n_l"), F.col("n_b").alias("n_r"),
+        )
+        .agg(n_shared.alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)
         .select(
             "doc_l",

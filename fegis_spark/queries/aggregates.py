@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from fegis_spark.catalog import register
 from fegis_spark.model import load_table
-from fegis_spark.queries.sqlfrag import duck_tokens
+from fegis_spark.queries.sqlfrag import duck_percentile, duck_tokens
 
 DEC = "decimal(38,6)"
 
@@ -1151,9 +1151,9 @@ def order_date_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "anomaly_mad",
-    oracle="""
+    oracle=f"""
     WITH med AS (
-      SELECT event_type, quantile_cont(value, 0.5) AS med
+      SELECT event_type, {duck_percentile('value', 0.5)} AS med
       FROM events GROUP BY event_type
     ),
     dev AS (
@@ -1161,7 +1161,7 @@ def order_date_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM events e JOIN med m USING (event_type)
     ),
     mad AS (
-      SELECT event_type, quantile_cont(dv, 0.5) AS mad
+      SELECT event_type, {duck_percentile('dv', 0.5)} AS mad
       FROM dev GROUP BY event_type
     )
     SELECT dev.event_type,
@@ -1182,8 +1182,8 @@ def anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     extreme rows shifts a mean/stddev gate but not a median/MAD one;
     the 1.4826 factor makes MAD consistent with sigma under
     normality, 3-sigma-equivalent threshold). Exact interpolated
-    medians (Spark percentile == DuckDB quantile_cont — the proven
-    portable pair) at both levels; the deviation projection persists
+    medians at both levels (the oracle spells Spark's percentile
+    formula, sqlfrag.duck_percentile); the deviation projection persists
     because the MAD aggregate AND the outlier count both read it, and
     at 100 TB the alternative is a third corpus scan. All constants
     literal with identical association; counts are integers."""
@@ -1208,7 +1208,7 @@ def anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type")
         .agg(
             # UNROUNDED: the interpolated medians are bitwise-identical
-            # cross-engine (percentile==quantile_cont pin) — round(x,6)
+            # cross-engine (sqlfrag.duck_percentile) — round(x,6)
             # would reintroduce the midpoint tie-break class
             F.max("med").alias("median_v"),
             F.max("mad").alias("mad_v"),

@@ -1034,20 +1034,20 @@ def dedup_minhash_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     each rebuilt the tokenize+NGram shingle pass over the corpus
     (pred persisted its copy; truth recomputed its own, twice-planned
     but once-executed via ReusedExchange). Now ONE persisted shingle
-    base from _portable_sig_bands feeds the signature build, the
+    base from _minhash_sig_bands feeds the signature build, the
     candidate verify joins AND the truth-side gram equi-join
     (ngram_jaccard_pairs shingle_base param) — the corpus is
     tokenized/shingled exactly once per run. Shingle family identical
     (with_shingles, same ngram), so values are unchanged."""
     from fegis_spark.operators.dedup import (
-        _portable_sig_bands,
+        _minhash_sig_bands,
         banded_candidate_pairs,
         minhash_verify_pairs,
         ngram_jaccard_pairs,
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    base, _sig, banded = _portable_sig_bands(
+    base, _sig, banded = _minhash_sig_bands(
         docs, "text", "doc_id", num_hashes=16, bands=4, ngram=3,
         seed_bcast_bound=32 * table_bytes(sf_dir, "documents"),
     )
@@ -1338,10 +1338,10 @@ def dedup_minhash_estimate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     mean rule). Scale: the pair table is band-bounded (cap routing),
     signature joins are k-wide projections; the HOF match count runs
     on the bounded pair table, never per corpus row."""
-    from fegis_spark.operators.dedup import _portable_sig_bands, banded_candidate_pairs
+    from fegis_spark.operators.dedup import _minhash_sig_bands, banded_candidate_pairs
 
     docs = load_table(spark, sf_dir, "documents")
-    base, sig, banded = _portable_sig_bands(
+    base, sig, banded = _minhash_sig_bands(
         docs, "text", "doc_id", num_hashes=16, bands=4, ngram=3,
         seed_bcast_bound=32 * table_bytes(sf_dir, "documents"),
     )

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from fegis_spark.catalog import register
 from fegis_spark.model import load_table, maybe_broadcast, table_bytes
-from fegis_spark.queries.sqlfrag import duck_tokens
+from fegis_spark.queries.sqlfrag import duck_percentile, duck_tokens
 
 #: Spark-side md5 bucket in [0, 100): deterministic, uniform-ish, and
 #: reproducible in any engine with md5 (DuckDB form below).
@@ -922,7 +922,7 @@ def temperature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH scored AS (
       SELECT doc_id, round({quality_score_sql('text')}, 6) AS q FROM documents
     ), cuts AS (
-      SELECT quantile_cont(q, [0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9]) AS c
+      SELECT {duck_percentile('q', [i / 10.0 for i in range(1, 10)])} AS c
       FROM scored
     ), assigned AS (
       SELECT doc_id, q,
@@ -944,9 +944,10 @@ def curriculum_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     cutpoints — the same boundary-comparison math
     sources/export.write_sorted_shards' repartitionByRange applies at
     write time, expressed as a query so the driver can verify it.
-    Spark's exact percentile() and DuckDB's quantile_cont share linear
-    interpolation (parity pinned by quality_median_gate), and the
-    strict q > cutpoint comparison is identical IEEE on both engines.
+    The oracle spells Spark's exact percentile() formula
+    (sqlfrag.duck_percentile: quantile_cont lands 1 ulp off tied
+    keys), so the strict q > cutpoint comparison is identical IEEE on
+    both engines.
 
     Plan: one agg for the 9 cutpoints (1-row broadcast), then a
     map-side shard assignment + one agg shuffle on shard — no window,
@@ -1341,7 +1342,7 @@ _FS_DECILES = [i / 10.0 for i in range(1, 10)]
       FROM keptdocs k
       WHERE k.doc_id NOT IN (SELECT b FROM ver WHERE jaccard >= 0.5)
     ), cuts AS (
-      SELECT quantile_cont(q, {_FS_DECILES}) AS c FROM surv
+      SELECT {duck_percentile('q', _FS_DECILES)} AS c FROM surv
     ), assigned AS (
       SELECT doc_id, n_chars, q,
              len(list_filter(c, x -> q > x)) AS shard,

@@ -81,6 +81,37 @@ def spark_hot_embeddings(emb):
     )
 
 
+def duck_percentile(col: str, fracs: float | list[float]) -> str:
+    """DuckDB aggregate expression equal to Spark's exact
+    percentile(col, fracs), bit for bit: a scalar for one fraction, a
+    list for a list. DuckDB's quantile_cont interpolates between tied
+    order statistics as lo*(1-d) + hi*d and can land 1 ulp off the
+    tie (0.7774190000000001 for a tied 0.777419), which flips a
+    `q > cut` comparison; Spark returns the tied key exactly. This
+    spells Spark's formula over the sorted non-NULL values s:
+    pos = (n-1)*f; the lower key when floor(pos) = ceil(pos) or the
+    two keys are equal, otherwise
+    (ceil(pos)-pos)*lo + (pos-floor(pos))*hi. NULL when there are no
+    values, as in Spark."""
+    one = not isinstance(fracs, list)
+    flist = ", ".join(f"CAST({f!r} AS DOUBLE)" for f in ([fracs] if one else fracs))
+    pos = "((len(s) - 1) * f)"
+    lo = f"s[CAST(floor({pos}) AS BIGINT) + 1]"
+    hi = f"s[CAST(ceil({pos}) AS BIGINT) + 1]"
+    at = (
+        f"CASE WHEN floor({pos}) = ceil({pos}) OR {lo} = {hi} THEN {lo} "
+        f"ELSE (ceil({pos}) - {pos}) * {lo} + ({pos} - floor({pos})) * {hi} END"
+    )
+    vals = (
+        f"list_sort(list(CAST({col} AS DOUBLE)) FILTER (WHERE {col} IS NOT NULL))"
+    )
+    out = (
+        f"list_transform([{vals}], s -> CASE WHEN s IS NULL THEN NULL "
+        f"ELSE list_transform([{flist}], f -> {at}) END)[1]"
+    )
+    return f"{out}[1]" if one else out
+
+
 def duck_match_text(col: str, query: str) -> str:
     """DuckDB predicate mirroring plans.filters.match_text(): every
     analyzer token of `query` must appear among the analyzer tokens of

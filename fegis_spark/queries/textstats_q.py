@@ -13,6 +13,7 @@ from fegis_spark.model import load_table, maybe_broadcast, table_bytes
 from fegis_spark.queries.sqlfrag import (
     HOT_CAP,
     duck_hot_docs,
+    duck_percentile,
     duck_tokens,
     portable_ln,
     spark_hot_docs,
@@ -585,7 +586,7 @@ def doc_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH scored AS (
       SELECT lang, {quality_score_sql('text')} AS q FROM documents
     ), med AS (
-      SELECT lang, quantile_cont(q, 0.5) AS med FROM scored GROUP BY lang
+      SELECT lang, {duck_percentile('q', 0.5)} AS med FROM scored GROUP BY lang
     )
     SELECT s.lang, COUNT(*) FILTER (WHERE s.q > m.med) AS n_above,
            COUNT(*) AS n_docs, m.med AS median_q
@@ -597,8 +598,8 @@ def doc_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 def quality_median_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[EXT] per-language EXACT median quality gate — the adaptive
     cousin of fixed-threshold filtering: each stratum keeps its
-    above-median half regardless of drift. Spark's exact percentile()
-    and DuckDB's quantile_cont share linear interpolation, so even the
+    above-median half regardless of drift. The oracle spells Spark's
+    exact percentile() formula (sqlfrag.duck_percentile), so even the
     medians hash-match. The scored projection (lang, q — ~16 B/row)
     persists: it feeds the median agg AND the gate, and re-deriving it
     would re-run the quality expression over the corpus twice."""
@@ -619,7 +620,7 @@ def quality_median_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_docs"),
         )
         # UNROUNDED median: the interpolation is bitwise-identical
-        # cross-engine (percentile==quantile_cont pin) — round(x, 6)
+        # cross-engine (sqlfrag.duck_percentile) — round(x, 6)
         # would reintroduce the midpoint tie-break class
         .select("lang", "n_above", "n_docs", F.col("med").alias("median_q"))
     )

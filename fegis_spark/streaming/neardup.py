@@ -18,7 +18,7 @@ CDC sink and the IVF index append):
   is the epoch commit log (fegis_spark/commitlog.py: write-new-marker /
   read-max — no rename, safe on S3-class object stores).
 * per batch: compute the batch's bands/shingles ONCE
-  (_portable_sig_bands — a pure function of text, so state written by
+  (_minhash_sig_bands — a pure function of text, so state written by
   earlier batches is mutually consistent), then probe in two pruned
   phases: (1) band candidates from the corpus-band x batch-band
   equi-join over ONLY the batch's bhp partitions (hot state buckets
@@ -68,7 +68,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fegis_spark.operators.dedup import (
-    _portable_sig_bands,
+    _minhash_sig_bands,
     banded_candidate_pairs,
     incremental_band_candidates,
     incremental_verify_candidates,
@@ -99,7 +99,7 @@ NEARDUP_STATE_PREFIXES = 64
 
 def _bhp(col):
     """Band-hash partition prefix. ``bh`` is an md5 HEX STRING
-    (_portable_sig_bands), so take two hex chars (uniform over 256)
+    (_minhash_sig_bands), so take two hex chars (uniform over 256)
     mod the prefix count — pure function of the band key, identical
     at write and probe time."""
     return F.pmod(
@@ -313,7 +313,7 @@ def neardup_sink(
             # marker write is the commit point: verdicts + state for
             # this epoch are already fully written — replay is a no-op
             return
-        base_b, _sig, banded_b = _portable_sig_bands(
+        base_b, _sig, banded_b = _minhash_sig_bands(
             batch_df, text_col, id_col, num_hashes, bands, ngram
         )
         # the batch bands table has 4+ consumers (prefix collect,
@@ -544,7 +544,7 @@ def neardup_replay_chunks(
     outs: list[DataFrame] = []
     for t in range(n_chunks):
         chunk = docs.filter(F.col(chunk_col) == t)
-        base_b, _sig, banded_b = _portable_sig_bands(
+        base_b, _sig, banded_b = _minhash_sig_bands(
             chunk, text_col, id_col, num_hashes, bands, ngram
         )
         persisted.append(base_b)

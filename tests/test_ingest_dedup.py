@@ -405,6 +405,37 @@ def test_banded_candidate_cap_carries_payload(spark):
     assert all(v == (1000, 1000 + b) for (a, b), v in got.items())
 
 
+@pytest.mark.parametrize("cap", [None, 10])
+def test_duplicate_ids_never_self_pair(spark, cap):
+    """A doc id that appears twice (a replayed row) must neither pair
+    with itself nor count a shared bucket twice, with and without the
+    hot-bucket cap: banded candidates give the one real pair, and the
+    winnow match count is per distinct (doc, fingerprint) — counting
+    doc 1's fingerprints twice would make n_l + n_r - n_shared zero
+    (a divide-by-zero under ANSI). Rows with a NULL band key are in no
+    bucket on either branch."""
+    from fegis_spark.operators.dedup import banded_candidate_pairs
+    from fegis_spark.operators.text_analysis import winnow_match_pairs
+
+    banded = spark.createDataFrame(
+        [(1, 0, 7), (1, 0, 7), (2, 0, 7), (3, 0, None), (4, 0, None)],
+        "doc long, band int, bh long",
+    )
+    got = {(r.a, r.b) for r in banded_candidate_pairs(banded, max_bucket_size=cap).collect()}
+    assert got == {(1, 2)}
+
+    text = "the quick brown fox jumps over the lazy dog near the river bank today"
+    docs = spark.createDataFrame(
+        [(1, text), (1, text), (2, text)], "doc_id long, text string"
+    )
+    rows = winnow_match_pairs(docs, max_bucket_size=cap).collect()
+    assert len(rows) == 1, rows
+    r = rows[0]
+    assert (r.doc_l, r.doc_r, r.fp_jaccard) == (1, 2, 1.0)
+    single = winnow_match_pairs(docs.dropDuplicates(), max_bucket_size=cap).collect()
+    assert [tuple(x) for x in single] == [tuple(r)]
+
+
 def test_minhash_cap_preserves_components(spark):
     """Exact-template hot cluster: star candidates all verify at
     jaccard 1.0, so connected components under the cap equal the

@@ -485,3 +485,27 @@ def test_grouped_ntile_lead_no_full_group_corpus_window(spark, cat):
     df.collect()
     final = df._jdf.queryExecution().executedPlan().toString()
     assert "ReusedExchange" in final, final
+
+
+@pytest.mark.parametrize(
+    "name, n_exchanges",
+    [
+        ("dedup_minhash_lsh", 3),
+        ("dedup_simhash", 3),
+        ("dedup_minhash_capped", 4),
+        ("winnow_match_pairs", 1),
+        ("winnow_match_capped", 2),
+        ("dedup_embedding_cosine", 1),
+    ],
+)
+def test_lsh_pair_family_exchange_counts(spark, cat, name, n_exchanges):
+    """The LSH candidate family shares one bucket→pair emitter; its
+    shuffle count per query is pinned so a change to the emitter or to
+    a sketch body cannot add a shuffle unnoticed. Counts are the
+    pre-execution shuffle Exchange nodes at sf0.001 (broadcast and
+    reused exchanges are not counted)."""
+    import re
+
+    p = formatted_plan(spark, cat, name)
+    spark.catalog.clearCache()
+    assert len(re.findall(r"\(\d+\) Exchange", p)) == n_exchanges, p

@@ -422,6 +422,50 @@ def test_percentile_interpolation_engine_agreement(spark, vals):
     assert [norm(a) for a in sv] == [norm(b) for b in dv]
 
 
+def test_duck_percentile_matches_spark_on_ties(spark):
+    """sqlfrag.duck_percentile equals Spark's exact percentile() bit for
+    bit on tie-heavy tables, where DuckDB's quantile_cont can land 1 ulp
+    off a tied key (0.7774190000000001 for a tied 0.777419) and flip a
+    `q > cut` comparison. 40 constructed tables of 2-30 values drawn
+    from 4 keys, decile fractions as in curriculum_shards."""
+    import random
+
+    from fegis_spark.queries.sqlfrag import duck_percentile
+
+    rng = random.Random(7)
+    keys = [0.777419, 0.123457, 0.5, 0.333333]
+    rows = [
+        (g, rng.choice(keys))
+        for g in range(40)
+        for _ in range(rng.randint(2, 30))
+    ]
+    fracs = [i / 10.0 for i in range(1, 10)]
+    sv = {
+        r.g: list(r.p)
+        for r in spark.createDataFrame(rows, "g int, x double")
+        .groupBy("g")
+        .agg(F.percentile("x", F.lit(fracs)).alias("p"))
+        .collect()
+    }
+    con = duckdb.connect()
+    con.execute("CREATE TABLE qt (g INT, x DOUBLE)")
+    con.executemany("INSERT INTO qt VALUES (?, ?)", rows)
+    dv = dict(
+        con.execute(
+            f"SELECT g, {duck_percentile('x', fracs)} FROM qt GROUP BY g"
+        ).fetchall()
+    )
+    assert dv == sv
+    # the scalar form and the no-values case (NULL, as in Spark)
+    med = con.execute(
+        f"SELECT {duck_percentile('x', 0.5)} FROM qt WHERE g = 0"
+    ).fetchone()[0]
+    assert med == sv[0][4]
+    assert con.execute(
+        f"SELECT {duck_percentile('x', 0.5)} FROM qt WHERE g < 0"
+    ).fetchone()[0] is None
+
+
 VEC64 = st.lists(
     st.floats(min_value=-0.875, max_value=0.875, allow_nan=False, width=32),
     min_size=64,

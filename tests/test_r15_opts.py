@@ -107,7 +107,7 @@ def test_ngram_jaccard_shingle_base_rejects_blocks(spark):
 def test_minhash_verify_bcast_gate_values_identical(spark):
     from fegis_spark.operators.dedup import (
         banded_candidate_pairs,
-        _portable_sig_bands,
+        _minhash_sig_bands,
     )
     from fegis_spark.operators.dedup import minhash_verify_pairs
 
@@ -119,7 +119,7 @@ def test_minhash_verify_bcast_gate_values_identical(spark):
         ],
         "doc_id long, text string",
     )
-    base, _sig, banded = _portable_sig_bands(
+    base, _sig, banded = _minhash_sig_bands(
         docs, "text", "doc_id", 16, 4, 3
     )
     cand = banded_candidate_pairs(banded, max_bucket_size=None)

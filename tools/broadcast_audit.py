@@ -33,15 +33,18 @@ r11 additions (r10 verdict #1/#3, mechanized):
     call's argument span) — a crossJoin is a cartesian product; its
     non-corpus side must be a 1-row agg or a structurally bounded
     panel, and the site must say which;
-  * every candidate-pair GENERATOR call (``banded_candidate_pairs`` and
-    the named near-dup wrappers) must either pass an explicit non-None
+  * every candidate-pair GENERATOR call (the bucket→pair emitter
+    ``_bucket_pairs``, ``banded_candidate_pairs`` and the named near-dup
+    wrappers) must either pass an explicit non-None
     ``max_bucket_size=`` cap or carry a ``# band-ok: <keyspace bound>``
     marker. This closes the class the r10 64x probe caught: a
     fixed-width band family (SRP: 4x2^8 buckets, SimHash: 4x2^15)
     saturates linearly with corpus size, making the uncapped band
     self-join QUADRATIC — md5/xxhash band families (2^60+ keyspace)
-    may declare that bound instead of capping. Manual bucket
-    self-joins (the ``alias("l")`` pattern) need the same marker.
+    may declare that bound instead of capping. Every LSH bucket
+    self-join lives in ``_bucket_pairs``; any other self-join (the
+    ``alias("l")`` pattern: shingle, block or cluster keys) needs the
+    same marker.
 
 r12 addition (r11 verdict #2, mechanized — resolved by measurement,
 evidence/topk_ab_r12.json):
@@ -90,7 +93,7 @@ BAND_MARKER = re.compile(r"#\s*band-ok:\s*\S")
 #: candidate-pair generators: a call must cap (non-None
 #: max_bucket_size=) or carry a # band-ok: <keyspace bound> marker
 PAIR_GENERATORS = re.compile(
-    r"\b(banded_candidate_pairs|minhash_lsh_pairs|simhash_pairs"
+    r"\b(_bucket_pairs|banded_candidate_pairs|minhash_lsh_pairs|simhash_pairs"
     r"|minhash_lsh_pairs_portable|simhash_pairs_portable"
     r"|ngram_jaccard_pairs|embedding_neardup_pairs"
     r"|embedding_neardup_pairs_lsh"

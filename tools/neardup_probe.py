@@ -59,7 +59,7 @@ def _mk_batch(spark, docs, lo, n, dup_of=None):
 
 def _probe_once(spark, state_dir, batch_df, prune):
     from fegis_spark.operators.dedup import (
-        _portable_sig_bands,
+        _minhash_sig_bands,
         incremental_band_candidates,
         incremental_verify_candidates,
     )
@@ -72,7 +72,7 @@ def _probe_once(spark, state_dir, batch_df, prune):
     from fegis_spark.commitlog import committed_epoch
 
     committed = committed_epoch(state_dir)
-    base_b, _sig, banded_b = _portable_sig_bands(
+    base_b, _sig, banded_b = _minhash_sig_bands(
         batch_df, "text", "doc_id", 16, 4, 3
     )
     bands_b = banded_b.select("doc", "band", "bh").persist()
