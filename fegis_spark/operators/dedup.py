@@ -254,9 +254,13 @@ def _bucket_pairs(
         + [f"p.{c}_a AS {c}_a" for c in pay]
         + [f"p.{c}_b AS {c}_b" for c in pay]
     )
+    # explode_outer, not explode: for explode the optimizer infers a
+    # size(ps) > 0 filter that evaluates the interpreted pair CASE a
+    # second time per bucket; the NULL row explode_outer emits for an
+    # empty bucket fails a < b like any other non-pair
     return (
         g.selectExpr(*keys, pairs_expr)
-        .selectExpr(*keys, "explode(ps) AS p")
+        .selectExpr(*keys, "explode_outer(ps) AS p")
         .selectExpr(*out_cols)
         .filter("a < b")
     )
