@@ -288,22 +288,12 @@ def winnow_match_pairs(
     cand = _bucket_pairs(
         ex, keys=("h",), payload=("n",), max_bucket_size=max_bucket_size
     )
-    # the same distinct count, spelled per branch for cost: after the
-    # capped fold the pairs are still hash-partitioned on h, so
-    # count(DISTINCT h) dedups there without another shuffle; behind the
-    # uncapped join (broadcast when the sets are small) it would add
-    # one, so that branch collects the set instead
-    n_shared = (
-        F.count_distinct("h")
-        if max_bucket_size is not None
-        else F.size(F.collect_set("h")).cast("bigint")
-    )
     return (
         cand.groupBy(
             F.col("a").alias("doc_l"), F.col("b").alias("doc_r"),
             F.col("n_a").alias("n_l"), F.col("n_b").alias("n_r"),
         )
-        .agg(n_shared.alias("n_shared"))
+        .agg(F.size(F.collect_set("h")).cast("bigint").alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)
         .select(
             "doc_l",
